@@ -1,6 +1,7 @@
 package graft
 import java.util.Locale
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Per-round benchmark main. Emits one machine-readable line per query as
   * it completes (a truncated/killed run still leaves every finished
@@ -115,37 +116,8 @@ object Bench {
       // x9 sorts last in the x family; its release deletes the
       // partitioned temp store (disk, not just cache)
       "x9_dpp_prune" -> operators.ScalePatterns)
-    // Self-diagnosis stamps (the round-9 g5 17.66 s lesson: a sandbox
-    // slow phase put a 6.4× single-run outlier into the permanent
-    // record with no in-artifact rebuttal): each per-query line carries
-    // the GC milliseconds spent DURING that query and the JIT code
-    // cache occupancy at its end — a slow-phase run shows outsized
-    // gc_ms (or a full code cache → compilation stalls) on the slow
-    // query, a real regression shows neither.
-    import scala.jdk.CollectionConverters._
-    def gcMs: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def codeCacheMb: Long = java.lang.management.ManagementFactory
-      .getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.startsWith("CodeHeap") ||
-        p.getName == "Code Cache")
-      .map(_.getUsage.getUsed).sum / (1024 * 1024)
-    def timed(key: String, name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val g0 = gcMs
-      val t0 = System.nanoTime()
-      // noop sink: forces full computation of every output column
-      // (a bare count() would let Catalyst prune the projections).
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(s"""{"$key":"$name","sec":${fmt(sec)},"gc_ms":${gcMs - g0},"cc_mb":$codeCacheMb}""")
-      System.out.flush()
-      sec
-    }
     val results = selected.map { case (name, fn) =>
-      val sec = timed("query", name, fn)
+      val sec = timeQuery(spark, sfDir, "query", name, fn)
       releaseAfter.get(name).foreach(_.release())
       name -> sec
     }
@@ -171,7 +143,6 @@ object Bench {
         val f = java.nio.file.Paths.get("TIME_BUDGET.tsv")
         if (!java.nio.file.Files.isReadable(f)) Map.empty
         else {
-          import scala.jdk.CollectionConverters._
           java.nio.file.Files.readAllLines(f).asScala
             .filterNot(l => l.startsWith("#") || l.isBlank)
             .flatMap { l =>
@@ -184,31 +155,83 @@ object Bench {
         Map.empty[String, Double] }
     if (budget.isEmpty)
       println("""{"budget":"unreadable","rebuttal":"slowest-only"}""")
-    val ratios = results.flatMap { case (n, s) =>
+    // a failed query has no time: it is stamped on its own line and
+    // counted in the summary, never timed as a fast one
+    val timedOk = results.collect { case (n, Some(s)) => n -> s }
+    val ratios = timedOk.flatMap { case (n, s) =>
       budget.get(n).filter(_ > 0).map(s / _) }.sorted
     val suiteScale = if (ratios.isEmpty) 1.0 else ratios(ratios.size / 2)
-    val outliers = results.filter { case (n, s) =>
+    val outliers = timedOk.filter { case (n, s) =>
       budget.get(n).exists(b => b > 0 && s > 3.0 * suiteScale * b) }
-    val slowest = results.sortBy(-_._2).take(1)
+    val slowest = timedOk.sortBy(-_._2).take(1)
     // cap the rebuttal pass so a globally-degraded run cannot double
     // the suite; slowest-first keeps the biggest walls stamped
     val rerunOf = (outliers ++ slowest).distinct.sortBy(-_._2).take(10)
     if (rerunOf.size < (outliers ++ slowest).distinct.size)
       println(s"""{"rerun_capped":${(outliers ++ slowest).distinct.size}}""")
-    val rerun = rerunOf.map { case (name, first) =>
+    val rerun = rerunOf.flatMap { case (name, first) =>
       Prestage.stages.foreach { case (_, gate, run) =>
         if (gate(name)) run(spark, sfDir)
       }
-      val again = timed("rerun_outlier", name, SparkEntry.queries(name))
-      println(s"""{"rerun_of":"$name","first_sec":${fmt(first)},"rerun_sec":${fmt(again)}}""")
-      System.out.flush()
-      name -> again
+      timeQuery(spark, sfDir, "rerun_outlier", name,
+        SparkEntry.queries(name)).map { again =>
+        println(s"""{"rerun_of":"$name","first_sec":${fmt(first)},"rerun_sec":${fmt(again)}}""")
+        System.out.flush()
+        name -> again
+      }
     }.toMap
     spark.stop()
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    println(summaryLine(results, rerun, sfDir))
+    System.out.flush()
+  }
+
+  // Self-diagnosis stamps (the round-9 g5 17.66 s lesson: a sandbox
+  // slow phase put a 6.4× single-run outlier into the permanent
+  // record with no in-artifact rebuttal): each per-query line carries
+  // the GC milliseconds spent DURING that query and the JIT code
+  // cache occupancy at its end — a slow-phase run shows outsized
+  // gc_ms (or a full code cache → compilation stalls) on the slow
+  // query, a real regression shows neither.
+  private def gcMs: Long = java.lang.management.ManagementFactory
+    .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+  private def codeCacheMb: Long = java.lang.management.ManagementFactory
+    .getMemoryPoolMXBeans.asScala
+    .filter(p => p.getName.startsWith("CodeHeap") ||
+      p.getName == "Code Cache")
+    .map(_.getUsage.getUsed).sum / (1024 * 1024)
+
+  /** Run one query into the noop sink (forces full computation of
+    * every output column; a bare count() would let Catalyst prune the
+    * projections) and print its line. A query that throws is stamped
+    * `"failed":true` and has no time (None); fatal errors propagate. */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+      key: String, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : Option[Double] = {
+    val g0 = gcMs
+    val t0 = System.nanoTime()
+    val err =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+      catch { case scala.util.control.NonFatal(e) => Some(e) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    val stamp = err.fold("")(e =>
+      s""","failed":true,"err":"${e.getClass.getSimpleName}"""")
+    println(s"""{"$key":"$name","sec":${fmt(sec)},"gc_ms":${gcMs - g0},"cc_mb":$codeCacheMb$stamp}""")
+    System.out.flush()
+    if (err.isEmpty) Some(sec) else None
+  }
+
+  /** The driver-parsed summary line. `total` sums the queries that ran
+    * (failed ones are counted in `failed`, not timed); `steady_total`
+    * takes each query's rerun time where a rerun was faster. */
+  private[graft] def summaryLine(results: Seq[(String, Option[Double])],
+      rerun: Map[String, Double], sfDir: String): String = {
+    val timedOk = results.collect { case (n, Some(s)) => n -> s }
+    val failed = results.size - timedOk.size
+    val total = timedOk.map(_._2).sum
     // the steady-state suite cost: one-time walls (JIT residue, a
     // sandbox cold phase) self-correct to the rerun's number
-    val steadyTotal = results
+    val steadyTotal = timedOk
       .map { case (n, s) => math.min(s, rerun.getOrElse(n, s)) }.sum
     // The driver's log capture keeps only the final ~2000 characters of
     // stdout (BENCH_r01..r04 all show the summary line's head cut off →
@@ -218,15 +241,14 @@ object Bench {
     // fit ("n" records the true count). Every query's exact timing is
     // already on its own incremental line above and in the committed
     // BENCH_LOCAL_r*.json pair.
-    val head = s"""{"metric":"total","value":${fmt(total)},"steady_total":${fmt(steadyTotal)},"unit":"sec","n":${results.size},"sf":"$sfDir","queries":{"""
-    val entries = results.sortBy(-_._2)
+    val head = s"""{"metric":"total","value":${fmt(total)},"steady_total":${fmt(steadyTotal)},"unit":"sec","n":${results.size},"failed":$failed,"sf":"$sfDir","queries":{"""
+    val entries = timedOk.sortBy(-_._2)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
     val kept = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + 2 // room for the closing "}}"
     entries.foreach { e =>
       if (len + e.length + 1 <= 1700) { kept += e; len += e.length + 1 }
     }
-    println(head + kept.mkString(",") + "}}")
-    System.out.flush()
+    head + kept.mkString(",") + "}}"
   }
 }

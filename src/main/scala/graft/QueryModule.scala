@@ -28,14 +28,77 @@ trait QueryModule {
 /** Parquet table loader for the driver-generated testdata star schema. */
 object Tables {
   import org.apache.spark.sql.functions.{col, from_utc_timestamp, lit, unix_micros}
-  import org.apache.spark.sql.types.{LongType, TimestampType}
+  import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** `spark.read.parquet(path)` with the schema resolved on the driver.
+    *
+    * A schema-less parquet read infers the schema with a Spark job (one
+    * task reading one footer, via `mergeSchemasInParallel` even when
+    * merging is off); on small tables that job is most of a query's
+    * fixed cost, and every read pays it again. Here the driver lists
+    * the path itself and reads the one footer that Spark's non-merging
+    * inference would read — `_common_metadata`, else `_metadata`, else
+    * the first data file in path order, skipping `_`/`.` entries the
+    * way Spark's file index does — and converts it with Spark's own
+    * `readSchemaFromFooter`, so session flags (nanosAsLong, NTZ
+    * inference) and Spark-written row metadata apply as in the job.
+    * Only the data schema is given: partition columns are still
+    * discovered (and typed) by Spark from the directory names.
+    *
+    * Anything this cannot resolve (schema merging on, no data file, an
+    * unreadable footer, a file gone between listing and reading) falls
+    * back to the plain read, which then fails or infers exactly as
+    * before. Nothing is cached: each call reads one footer. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private[graft] def footerSchema(spark: SparkSession, path: String)
+      : Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    // InMemoryFileIndex.shouldFilterOutPathName
+    def hidden(n: String): Boolean =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+    def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(fs, st.getPath) else Seq(st))
+    try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf)
+      val roots = Option(fs.globStatus(root)).toSeq.flatten.map(_.getPath)
+      val files = roots.flatMap(leaves(fs, _)).sortBy(_.getPath.toString)
+      val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      val pick = summaries
+        .flatMap(n => files.find(_.getPath.getName == n)).headOption
+        .orElse(files.find(st => !summaries.contains(st.getPath.getName)))
+      pick.map { st =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer),
+          new ParquetToSparkSchemaConverter(conf))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** The library-wide contract is `events.ts: LongType` epoch-nanos (see

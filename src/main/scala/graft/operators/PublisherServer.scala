@@ -55,7 +55,7 @@ object PublisherServer {
     * tie-broken on ch for determinism). */
   def chUv(s: SparkSession, storeDir: String, date: String,
       limit: Int): DataFrame =
-    s.read.parquet(storeDir)
+    graft.Tables.parquet(s, storeDir)
       .filter(col("cur_date") === date)
       .groupBy(col("ch"))
       .agg(sum(col("uv_ct")).as("uv_ct"))
@@ -89,6 +89,21 @@ object PublisherServer {
       .map(_.split("=", 2))
       .collectFirst { case Array(k, v) if k == name && v.nonEmpty => v }
 
+  /** A request the shell refuses before any query runs: answered 400
+    * with the reference's error envelope. */
+  private final class BadRequest(msg: String) extends Exception(msg)
+
+  /** Most rows `/ch?limit=` may ask for. */
+  private[graft] val MaxLimit = 1000
+
+  /** `/ch?limit=N`: an integer in 1..[[MaxLimit]], 10 when absent. */
+  private def limitOf(ex: HttpExchange): Int =
+    param(ex, "limit").fold(10) { v =>
+      v.toIntOption.filter(n => n >= 1 && n <= MaxLimit).getOrElse(
+        throw new BadRequest(
+          s"limit must be an integer in 1..$MaxLimit, got '$v'"))
+    }
+
   private def reply(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type",
@@ -109,6 +124,8 @@ object PublisherServer {
           """{"status":1,"msg":"not found"}""")
         else reply(ex, 200, render(ex))
       } catch {
+        case e: BadRequest =>
+          reply(ex, 400, s"""{"status":1,"msg":"${esc(e.getMessage)}"}""")
         case e: Exception =>
           reply(ex, 500,
             s"""{"status":1,"msg":"${esc(String.valueOf(e.getMessage))}"}""")
@@ -154,7 +171,7 @@ object PublisherServer {
     // semantics), picks the read path — the serving queries differ only
     // in how order_ct folds (countDistinct vs additive sum).
     lazy val orderIsDetail =
-      s.read.parquet(orderStore).columns.contains("o_orderkey")
+      graft.Tables.parquet(s, orderStore).columns.contains("o_orderkey")
 
     // The store is written partitionBy("cur_date"), so the newest day is
     // in the partition directory names — answer the default-date path
@@ -166,7 +183,7 @@ object PublisherServer {
         .getOrElse(Array.empty)
         .map(_.getName.stripPrefix("cur_date="))
         .reduceOption((a, b) => if (a >= b) a else b)
-        .getOrElse(s.read.parquet(store)
+        .getOrElse(graft.Tables.parquet(s, store)
           .agg(max(col("cur_date").cast("string"))).head().getString(0))
 
     def dateOf(ex: HttpExchange, store: String): String =
@@ -194,8 +211,8 @@ object PublisherServer {
     // GET /ch?date=…&limit=N → categories/series envelope
     // (TrafficStatsController.java:26-47)
     endpoint(server, "/ch") { ex =>
+      val limit = limitOf(ex)
       val day = dateOf(ex, trafficStore)
-      val limit = param(ex, "limit").map(_.toInt).getOrElse(10)
       chEnvelope(chUv(s, trafficStore, day, limit).collect())
     }
 
@@ -237,8 +254,8 @@ object PublisherServer {
     }
 
     endpoint(server, "/ch") { ex =>
+      val limit = limitOf(ex)
       val day = dateOf(ex, ServingApi.navLatestEventDay(s, dir))
-      val limit = param(ex, "limit").map(_.toInt).getOrElse(10)
       chEnvelope(ServingApi.navChUv(s, dir, day, limit).collect())
     }
 

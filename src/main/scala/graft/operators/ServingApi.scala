@@ -30,13 +30,13 @@ object ServingApi {
 
   /** GET /gmv?date=… → one-day pruned sum. */
   def gmv(s: SparkSession, storeDir: String, date: String): DataFrame =
-    s.read.parquet(storeDir)
+    Tables.parquet(s, storeDir)
       .filter(col("cur_date") === date)
       .agg(sum(col("order_amount")).cast("double").as("gmv"))
 
   /** GET /province?date=… → per-province amounts for one day. */
   def province(s: SparkSession, storeDir: String, date: String): DataFrame =
-    s.read.parquet(storeDir)
+    Tables.parquet(s, storeDir)
       .filter(col("cur_date") === date)
       .groupBy(col("province_name"))
       .agg(sum(col("order_amount")).cast("double").as("order_amount"),
@@ -50,7 +50,7 @@ object ServingApi {
     * (the detail store's countDistinct is already folded in). */
   def provinceDws(s: SparkSession, storeDir: String, date: String)
       : DataFrame =
-    s.read.parquet(storeDir)
+    Tables.parquet(s, storeDir)
       .filter(col("cur_date") === date)
       .groupBy(col("province_name"))
       .agg(sum(col("order_amount")).cast("double").as("order_amount"),
@@ -59,7 +59,7 @@ object ServingApi {
   /** GET /ch?limit=N → top-N provinces by order count, date-ranged. */
   def topProvinces(s: SparkSession, storeDir: String, from: String,
       to: String, limit: Int): DataFrame =
-    s.read.parquet(storeDir)
+    Tables.parquet(s, storeDir)
       .filter(col("cur_date") >= from && col("cur_date") <= to)
       .groupBy(col("province_name"))
       .agg(countDistinct(col("o_orderkey")).as("order_ct"))

@@ -371,7 +371,8 @@ object AggRewrite {
       path: Option[String], partitionKey: Option[String],
       storeRoot: Option[String], dataDir: Option[String],
       lastDelta: Long, persistManifest: Boolean = true,
-      fenceOverride: Option[String] = None): Unit = {
+      fenceOverride: Option[String] = None,
+      summaryCount: Option[Long] = None): Unit = {
     // analyze the defining expressions in the base's own context, then
     // resolve them down to the leaf relation's attributes so canonical
     // forms match what matching computes for candidate plans
@@ -482,7 +483,9 @@ object AggRewrite {
       },
       summary.queryExecution.analyzed,
       baseSig,
-      summary.count(), // one metadata-sized count; the selection cost
+      // one metadata-sized count (the selection cost); callers that
+      // already scanned the summary pass it in
+      summaryCount.getOrElse(summary.count()),
       keys, measures, path, partitionKey, mergeTemplates,
       storeRoot, dataDir, lastDelta,
       partSigs, basePartCol, stitchKey, partialTemplate, defsSql)
@@ -977,8 +980,7 @@ object AggRewrite {
     val w = withRebuilt.write.mode("overwrite")
     d.partitionKey.fold(w)(w.partitionBy(_)).parquet(newDir)
     val summary = session.read.schema(storedSchema).parquet(newDir)
-    val total = summary.agg(sum(col(cntCol))).head
-    val stored = if (total.isNullAt(0)) 0L else total.getLong(0)
+    val (stored, summaryCount) = storedTotals(summary, cntCol)
     val actual = base.count()
     if (stored != actual) throw new IllegalStateException(
       s"delta reconciliation failed for '$name': folded summary counts " +
@@ -986,7 +988,7 @@ object AggRewrite {
         "drifted; re-materialize")
     registerInternal(session, name, base, d.keyCols, d.measureCols,
       summary, Some(root), d.partitionKey, Some(root), Some(newDir),
-      batchId)
+      batchId, summaryCount = Some(summaryCount))
     // GC versions older than the PREVIOUS one (an in-flight reader may
     // still scan the previous; anything older has no live reader)
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -1040,17 +1042,22 @@ object AggRewrite {
     * The residual risk of any partial refresh is the caller missing a
     * changed partition — the re-registration would bless a wrong
     * summary. Guard: before re-registering, the refreshed store's total
-    * partial count must equal the base's current row count (metadata-
-    * cheap on parquet). A missed partition whose row count changed is
-    * caught and the refresh REFUSES to re-register — the old
+    * partial count must equal the base's current row count. A missed
+    * partition whose row count changed is caught and the refresh
+    * REFUSES to re-register — the old
     * registration stays stale, so navigation keeps falling through to
     * raw truth (sound). Blind spot, documented: an in-place mutation
     * that preserves a missed partition's row count passes the guard;
     * callers whose base mutates (rather than appends) should re-
-    * materialize fully. Requires a `count_star` measure. */
+    * materialize fully. Requires a `count_star` measure.
+    *
+    * Three Spark executions per call: one base scan (row count plus
+    * the touched values that still have rows), the write, and one
+    * summary scan (count_star total plus the summary's cardinality,
+    * which registration reuses). */
   def refreshPartitions(session: SparkSession, name: String,
       base: DataFrame, values: Seq[Any]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.{collect_set, count, lit, when}
     val d = registry.get(session).flatMap(_.find(_.name == name))
       .getOrElse(throw new IllegalArgumentException(
         s"no summary '$name' registered for this session"))
@@ -1067,27 +1074,29 @@ object AggRewrite {
     val pkExpr = d.keyCols.collectFirst { case (n, c) if n == pk => c }
       .getOrElse(throw new IllegalStateException(
         s"partition key '$pk' not among summary keys"))
-    val fresh = summaryRows(
-      base.filter(pkExpr.isin(values: _*)),
-      d.keyCols, d.measureCols)
-    // a named partition with NO remaining base rows cannot be landed by
-    // dynamic overwrite (nothing overwrites the old files) — catch it
-    // BEFORE writing, with the right advice
-    val freshVals = fresh.select(col(pk)).distinct()
-      .collect().map(_.get(0)).toSet
-    val deleted = values.filterNot(freshVals.contains)
+    // ONE base scan: the reconciliation row count and the touched
+    // values that still have rows. A named partition with NO remaining
+    // base rows cannot be landed by dynamic overwrite (nothing
+    // overwrites the old files) — caught here, BEFORE writing, with the
+    // right advice
+    val probe = base.agg(count(lit(1)),
+      collect_set(when(pkExpr.isin(values: _*), pkExpr))).head
+    val actual = probe.getLong(0)
+    val liveVals = probe.getSeq[Any](1).toSet
+    val deleted = values.filterNot(liveVals.contains)
     if (deleted.nonEmpty) throw new IllegalStateException(
       s"partition(s) ${deleted.mkString(", ")} of '$name' have no " +
         "remaining base rows — dynamic overwrite cannot drop a " +
         "partition; re-materialize fully")
+    val fresh = summaryRows(
+      base.filter(pkExpr.isin(values: _*)),
+      d.keyCols, d.measureCols)
     fresh.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(pk).parquet(path)
     // explicit schema: see materialize — no partition-type re-inference
     val summary = session.read.schema(fresh.schema).parquet(path)
-    val total = summary.agg(sum(col(cntCol))).head
-    val stored = if (total.isNullAt(0)) 0L else total.getLong(0)
-    val actual = base.count()
+    val (stored, summaryCount) = storedTotals(summary, cntCol)
     if (stored != actual) {
       // leave the OLD (stale-signed) registration in place: navigation
       // keeps falling through, which is correct; the store is already
@@ -1100,8 +1109,19 @@ object AggRewrite {
     // in-place partition overwrite: the version dir is unchanged, so
     // the delta-maintenance state carries over as-is
     registerInternal(session, name, base, d.keyCols, d.measureCols,
-      summary, d.path, Some(pk), d.storeRoot, d.dataDir, d.lastDelta)
+      summary, d.path, Some(pk), d.storeRoot, d.dataDir, d.lastDelta,
+      summaryCount = Some(summaryCount))
     summary
+  }
+
+  /** One scan of a landed summary: (the count_star total the
+    * reconciliation compares with the base's row count, the summary's
+    * own row count that registration records). */
+  private def storedTotals(summary: DataFrame, cntCol: String)
+      : (Long, Long) = {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val r = summary.agg(sum(col(cntCol)), count(lit(1))).head
+    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
   }
 
   /** Explicit-rewrite route: apply the registered summaries to ONE

@@ -141,7 +141,7 @@ object BaseDbApp {
     * sink as a partitioned write). */
   def run(s: SparkSession, srcDir: String, storeDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(s"$srcDir/envelopes.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$srcDir/envelopes.parquet").schema
     val src = StatefulStreams.reader(s, schema)
       .parquet(s"$srcDir/envelopes*.parquet")
     routed(s, src).writeStream
@@ -155,5 +155,5 @@ object BaseDbApp {
 
   /** Read the routed store back (sink_table is the partition column). */
   def store(s: SparkSession, storeDir: String): DataFrame =
-    s.read.parquet(storeDir)
+    graft.Tables.parquet(s, storeDir)
 }

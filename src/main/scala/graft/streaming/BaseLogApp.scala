@@ -209,7 +209,7 @@ object BaseLogApp {
     * day-partitioned route sinks from one cached micro-batch. */
   def run(s: SparkSession, srcDir: String, outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(s"$srcDir/logs.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$srcDir/logs.parquet").schema
     val src = StatefulStreams.reader(s, schema)
       .parquet(s"$srcDir/logs*.parquet")
     fixStream(parsed(src)).toDF().writeStream
@@ -237,7 +237,7 @@ object BaseLogApp {
     * (ch, is_new) 10 s page-view window — watermarked tumble over the
     * route's own ts_ms, exactly the A2 bean-window shape. */
   def pageViewWindow(s: SparkSession, pageDir: String): DataFrame = {
-    val schema = s.read.parquet(pageDir).schema
+    val schema = graft.Tables.parquet(s, pageDir).schema
     val src = s.readStream.schema(schema)
       .option("basePath", pageDir).parquet(s"$pageDir/*")
     pageViewAgg(src)

@@ -120,7 +120,7 @@ object DimApp {
     * merge-maintained store per configured sink table. */
   def run(s: SparkSession, srcDir: String, storeDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(s"$srcDir/envelopes.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$srcDir/envelopes.parquet").schema
     val src = StatefulStreams.reader(s, schema)
       .parquet(s"$srcDir/envelopes*.parquet")
     parsedDims(s, src).writeStream
@@ -157,7 +157,7 @@ object DimApp {
     // probe the schema from the same glob the stream reads — a
     // separately-named probe file would itself match a glob and be
     // ingested twice (duplicate versions in a close-and-insert store)
-    val schema = s.read.parquet(s"$srcDir/envelopes*.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$srcDir/envelopes*.parquet").schema
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$srcDir/envelopes*.parquet")

@@ -73,7 +73,7 @@ object IncrementalDedup {
     * accumulated store under storeDir/{bands,pairs}. */
   def run(s: SparkSession, srcDir: String, storeDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(s"$srcDir/*.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$srcDir/*.parquet").schema
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*.parquet")
     src.writeStream
@@ -86,7 +86,7 @@ object IncrementalDedup {
           val bandsDir = s"$storeDir/bands"
           val prev =
             if (new java.io.File(bandsDir).exists)
-              s.read.parquet(bandsDir)
+              graft.Tables.parquet(s, bandsDir)
             else bands.limit(0)
           batchPairs(bands, prev).write.mode("append")
             .parquet(s"$storeDir/pairs")
@@ -98,5 +98,5 @@ object IncrementalDedup {
 
   /** All candidate pairs found so far (canonical, distinct). */
   def pairs(s: SparkSession, storeDir: String): DataFrame =
-    s.read.parquet(s"$storeDir/pairs").distinct()
+    graft.Tables.parquet(s, s"$storeDir/pairs").distinct()
 }

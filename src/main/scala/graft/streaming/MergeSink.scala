@@ -141,7 +141,7 @@ class Scd2ParquetMergeSink(storeDir: String, keyCol: String,
     // rest merge normally (detection must precede the batch window —
     // version numbering may not count dropped ops)
     val baseSnap = parsedVersions.filter(_._1 < batchId)
-      .maxOption.map(v => s.read.parquet(dirOf(v)))
+      .maxOption.map(v => graft.Tables.parquet(s, dirOf(v)))
     val admitted = baseSnap match {
       case None =>
         // first batch: no store, no cross-batch order to violate; keep
@@ -222,7 +222,7 @@ class Scd2ParquetMergeSink(storeDir: String, keyCol: String,
   def current(s: SparkSession): DataFrame = {
     val vs = parsedVersions
     require(vs.nonEmpty, s"no committed version under $storeDir")
-    s.read.parquet(dirOf(vs.max))
+    graft.Tables.parquet(s, dirOf(vs.max))
   }
 
   /** Commit one batch's ordering-contract violators. Same committed-
@@ -252,7 +252,7 @@ class Scd2ParquetMergeSink(storeDir: String, keyCol: String,
           col("valid_from_seq").as("open_from_seq")): _*)
         .filter(lit(false))
     } else
-      vs.sorted.map(v => s.read.parquet(s"$quarantineDir/v$v"))
+      vs.sorted.map(v => graft.Tables.parquet(s, s"$quarantineDir/v$v"))
         .reduce(_ unionByName _)
   }
 
@@ -381,7 +381,7 @@ class VersionedParquetMergeSink(storeDir: String, keyCol: String,
     val s = batch.sparkSession
     val outCols = (Seq(keyCol) ++ payloadCols :+ seqCol).map(col)
     val latest = versions.sorted.lastOption
-    val storeOpt = latest.map(v => s.read.parquet(s"$storeDir/v$v"))
+    val storeOpt = latest.map(v => graft.Tables.parquet(s, s"$storeDir/v$v"))
     // Placeholder tracking: columns the latest version materialized as
     // all-null STRING because no producer had emitted them yet. When the
     // batch now carries such a column with a real type, the store side
@@ -473,7 +473,7 @@ class VersionedParquetMergeSink(storeDir: String, keyCol: String,
   def current(s: SparkSession): DataFrame = {
     val vs = versions
     require(vs.nonEmpty, s"no committed version under $storeDir")
-    s.read.parquet(s"$storeDir/v${vs.max}")
+    graft.Tables.parquet(s, s"$storeDir/v${vs.max}")
   }
 
   /** Time-travel read (`VERSION AS OF`): the latest committed snapshot
@@ -484,7 +484,7 @@ class VersionedParquetMergeSink(storeDir: String, keyCol: String,
   def snapshotAt(s: SparkSession, version: Long): DataFrame = {
     val vs = versions.filter(_ <= version)
     require(vs.nonEmpty, s"no committed version <= $version in $storeDir")
-    s.read.parquet(s"$storeDir/v${vs.max}")
+    graft.Tables.parquet(s, s"$storeDir/v${vs.max}")
   }
 
   /** Retention (`VACUUM` analog): drop all but the newest `retain`

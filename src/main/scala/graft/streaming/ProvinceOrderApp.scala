@@ -28,7 +28,7 @@ object ProvinceOrderApp {
 
   /** orders parquet as a bounded stream. */
   def orderStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/orders.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$dir/orders.parquet").schema
     StatefulStreams.reader(s, schema).parquet(s"$dir/orders*.parquet")
   }
 
@@ -67,7 +67,7 @@ object ProvinceOrderApp {
 
   /** A10 serving read over the store: one pruned day partition. */
   def gmvOfDay(s: SparkSession, outDir: String, day: String): DataFrame =
-    s.read.parquet(outDir)
+    graft.Tables.parquet(s, outDir)
       .filter(col("cur_date") === day)
       .groupBy(col("province_name"))
       .agg(sum(col("order_amount")).as("order_amount"),

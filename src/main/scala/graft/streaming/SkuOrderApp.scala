@@ -117,7 +117,7 @@ object SkuOrderApp {
     * dim cascade → day-partitioned parquet store. */
   def run(s: SparkSession, srcDir: String, dimDir: String, outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(s"$srcDir/lineitem.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$srcDir/lineitem.parquet").schema
     val src = StatefulStreams.reader(s, schema)
       .parquet(s"$srcDir/lineitem*.parquet")
     val deduped = withEventTime(src)

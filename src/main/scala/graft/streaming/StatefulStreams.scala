@@ -50,7 +50,7 @@ object StatefulStreams {
   /** events parquet as a bounded stream (file source; the Kafka source
     * S1 differs only in format("kafka") + value parsing). */
   def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$dir/events.parquet").schema
     // glob form: the file-stream source requires a directory/glob basePath
     // (ts normalized to the library-wide epoch-nanos LongType contract,
     // same seam as the batch Tables loader)

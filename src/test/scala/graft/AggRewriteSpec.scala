@@ -415,6 +415,102 @@ class AggRewriteSpec extends SparkSuite {
     }
   }
 
+  test("partition refresh in three SQL executions; a day with no " +
+      "remaining base rows refuses before anything is written") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_aggrw_refuse_").toString
+    import spark.implicits._
+    def facts = spark.read.parquet(s"$base/facts")
+    def q = AggRewrite.navigate(
+      facts.groupBy(col("day")).agg(count(lit(1)).as("n")))
+    // every file under the store, with its bytes
+    def storeFiles(): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(s"$base/summary")
+      val w = java.nio.file.Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => root.relativize(f).toString ->
+            java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      } finally w.close()
+    }
+    // root SQL executions run from this thread, counted up to a
+    // sentinel action (the listener bus delivers in order)
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        if (qe.logical.toString.contains("graft_refresh_sentinel"))
+          sentinel.set(1)
+        else executions.incrementAndGet()
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = executions.incrementAndGet()
+    }
+    def executionsDuring(body: => Unit): Int = {
+      executions.set(0); sentinel.set(0)
+      body
+      spark.range(1).select(lit("graft_refresh_sentinel")).collect()
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(
+          org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+        assert(sentinel.get == 1)
+      }
+      executions.get
+    }
+    try {
+      Seq(("2024-01-01", 1L), ("2024-01-02", 2L), ("2024-01-02", 3L),
+        ("2024-01-03", 4L)).toDF("day", "v")
+        .write.mode("overwrite").parquet(s"$base/facts")
+      AggRewrite.materialize(spark, "refuse_spec", facts,
+        keys = Seq("day" -> col("day")),
+        measures = Seq(("cnt", "count_star", lit(1))),
+        path = s"$base/summary", partitionBy = Some("day"))
+      // a refresh of a changed day: one base scan, one write, one
+      // summary scan — registration reuses the summary scan's count
+      Seq(("2024-01-03", 5L)).toDF("day", "v")
+        .write.mode("append").parquet(s"$base/facts")
+      val appended = facts
+      spark.listenerManager.register(listener)
+      val n = try executionsDuring(AggRewrite.refreshPartitions(spark,
+          "refuse_spec", appended, Seq("2024-01-03")))
+        finally spark.listenerManager.unregister(listener)
+      assert(n == 3, s"refresh ran $n SQL executions")
+      assert(scanPaths(q).exists(_.contains("summary")))
+      // every base row of 2024-01-02 removed: the base is rewritten
+      // without that day, so the registration is stale
+      Seq(("2024-01-01", 1L), ("2024-01-03", 4L), ("2024-01-03", 5L))
+        .toDF("day", "v")
+        .write.mode("overwrite").parquet(s"$base/facts")
+      val before = storeFiles()
+      val err = intercept[IllegalStateException] {
+        AggRewrite.refreshPartitions(spark, "refuse_spec", facts,
+          Seq("2024-01-02"))
+      }
+      assert(err.getMessage.contains("no remaining base rows"),
+        err.getMessage)
+      val after = storeFiles()
+      assert(after.keySet == before.keySet)
+      assert(after == before, "the refusal must not touch the store")
+      // the old registration stays in place and falls through to raw
+      val nav = q
+      assert(scanPaths(nav).exists(_.contains("facts")),
+        s"stale registration must fall through: ${scanPaths(nav)}")
+      assert(nav.orderBy("day").collect().map(r =>
+        r.getString(0) -> r.getLong(1)).toSeq ==
+        Seq("2024-01-01" -> 1L, "2024-01-03" -> 2L))
+    } finally {
+      AggRewrite.unregister(spark, "refuse_spec")
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+        f.delete()
+      }
+      rm(new java.io.File(base))
+    }
+  }
+
   test("streaming maintenance: foreachBatch refresh keeps navigation live") {
     // the reference's loop end-to-end: the stream lands each CDC batch
     // on the fact store, refreshes ONLY the touched day partitions of

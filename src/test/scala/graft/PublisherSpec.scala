@@ -117,6 +117,28 @@ class PublisherSpec extends SparkSuite {
     } finally pub.stop()
   }
 
+  test("/ch refuses a bad limit with a 400 envelope on both publishers") {
+    val trafficStore = tmp("pub_traffic_limit")
+    PublisherServer.buildTrafficStore(spark, sf, trafficStore)
+    val plain = PublisherServer.start(spark, trafficStore, trafficStore, 0)
+    // no summaries registered: the navigated /ch reads raw events
+    val nav = PublisherServer.startNavigated(spark, sf, 0)
+    try Seq(plain, nav).foreach { pub =>
+      Seq("abc", "-1", "0", "1001", "99999999999", "2.5").foreach { v =>
+        val (c, b) = get(pub.port, s"/ch?limit=$v")
+        assert(c == 400, s"limit=$v: $b")
+        assert(b == "{\"status\":1,\"msg\":\"limit must be an integer " +
+          s"in 1..${PublisherServer.MaxLimit}, got '$v'\"}", b)
+      }
+      // in range (and absent) still serve
+      Seq("/ch?limit=1", s"/ch?limit=${PublisherServer.MaxLimit}", "/ch")
+        .foreach { pq =>
+          val (c, b) = get(pub.port, pq)
+          assert(c == 200 && b.startsWith("{\"status\":0,"), s"$pq: $b")
+        }
+    } finally { plain.stop(); nav.stop() }
+  }
+
   test("navigated publisher: endpoints read the summaries while fresh, " +
       "fall through to raw truth after a base append, re-arm on refresh") {
     val dir = tmp("navpub_base")

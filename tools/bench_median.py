@@ -17,6 +17,8 @@ for f in sorted(glob.glob(f"/root/repo/BENCH_LOCAL_{tag}_run*.json")):
         if not line.startswith('{"query"'):
             continue
         d = json.loads(line)
+        if d.get("failed"):  # a failed query has no time
+            continue
         qs[d["query"]] = d["sec"]
     runs.append((f, qs))
     print(f"{f}: {len(qs)} queries, total {sum(qs.values()):.1f}s")
