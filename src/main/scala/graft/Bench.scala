@@ -11,11 +11,11 @@ import scala.jdk.CollectionConverters._
   * slowest-first per-query entries while they fit) because the driver
   * keeps only the last ~2000 chars of output.
   *
-  * Query families that share a memoized intermediate are isolated by
-  * releasing the module's caches right after the family's last query (in
-  * the sorted run order): cached blocks built by one family previously
-  * lingered across the whole 76-query suite and made timings
-  * order-dependent (the round-2/3 flip-flop noise). */
+  * Query families that share a standing intermediate are isolated by
+  * releasing the module's [[Standing]]s right after the last selected
+  * query reading any of them (in the sorted run order): cached blocks
+  * built by one family previously lingered across the whole suite and
+  * made timings order-dependent (the round-2/3 flip-flop noise). */
 object Bench {
   private def fmt(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
 
@@ -69,10 +69,10 @@ object Bench {
             println(s"""{"warmup_failed":"$n","err":"${e.getClass.getSimpleName}"}""")
         }
       }
-      // drop the sweep's memoized state (keyed per (session, dir)):
+      // drop the sweep's standing state (keyed per (session, dir)):
       // the prestage below rebuilds it for the bench SF, and a
-      // lingering memo would distort the family releases
-      SparkEntry.modules.foreach(_.release())
+      // lingering build would distort the family releases
+      Prestage.release()
       println(s"""{"warmup":"sweep","sec":${fmt((System.nanoTime() - w0) / 1e9)},"n":${selected.size},"failed":$failed}""")
       System.out.flush()
     }
@@ -95,30 +95,13 @@ object Bench {
         System.out.flush()
       }
     }
-    // key = LAST query (sorted order) reading each module's memoized
-    // intermediate: labels after c2; band/candidate/simhash memos after
-    // d9; parsed envelopes after s2_debezium (its users are p4/p9/s2_*)
-    val releaseAfter: Map[String, QueryModule] = Map(
-      // c5 reads the train-posting memo and sorts after c2_kept (the
-      // previous boundary) — the release must follow the family's LAST
-      // memo reader or it silently rebuilds inside a timed query
-      "c5_contamination" -> operators.CurationOps,
-      // d9 > d7 > d6 in sort order and d9 reads the candidate memo —
-      // releasing any earlier makes d9 silently rebuild the pipeline
-      "d9_threshold_sweep" -> operators.DedupOps,
-      "s2_debezium_snapshot" -> operators.EnvelopeOps,
-      // k12 is the last reader of the synthesized-topic memos (sorted
-      // after g5/g6); releasing at g6 would leave k12 rebuilding the
-      // dim envelope log inside its timed window
-      "k12_dim_scd2_history" -> operators.ComposedApps,
-      // v10 runs before v9 in sorted order; both read the Lloyd memo
-      "v9_kmeans_assign" -> operators.VectorOps,
-      // x9 sorts last in the x family; its release deletes the
-      // partitioned temp store (disk, not just cache)
-      "x9_dpp_prune" -> operators.ScalePatterns)
+    // each module's standings go right after the LAST selected query
+    // reading any of them — any earlier and that reader silently
+    // rebuilds inside its timed window
+    val releaseAfter = Prestage.releaseAfter(selected.map(_._1))
     val results = selected.map { case (name, fn) =>
       val sec = timeQuery(spark, sfDir, "query", name, fn)
-      releaseAfter.get(name).foreach(_.release())
+      releaseAfter.get(name).foreach(Prestage.release)
       name -> sec
     }
     // Outlier rebuttal stamps (round-15 #2, closing the cold-phase

@@ -17,12 +17,12 @@ trait QueryModule {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracles: Map[String, String]
 
-  /** Drop any memoized/persisted intermediates this module holds. The
-    * bench harness calls this at family boundaries so cached blocks built
-    * by one query family cannot distort the timings of the next; modules
-    * without memos inherit the no-op. Correctness is unaffected — a later
-    * call simply rebuilds the intermediate. */
-  def release(): Unit = ()
+  /** The shared intermediates this module builds once and its queries
+    * read ([[Standing]]). The bench releases them together after the
+    * last selected query reading any of them, so cached blocks built by
+    * one family cannot distort the timings of the next; a later call
+    * simply rebuilds. */
+  def standings: Seq[Standing[_]] = Nil
 }
 
 /** Parquet table loader for the driver-generated testdata star schema. */
@@ -60,6 +60,15 @@ object Tables {
   def parquet(spark: SparkSession, path: String): DataFrame =
     footerSchema(spark, path)
       .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** [[parquet]] over several root paths: one path resolves its schema
+    * on the driver; several keep the plain read, which infers across
+    * them. */
+  def parquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    paths match {
+      case Seq(path) => parquet(spark, path)
+      case _ => spark.read.parquet(paths: _*)
+    }
 
   private[graft] def footerSchema(spark: SparkSession, path: String)
       : Option[StructType] = {

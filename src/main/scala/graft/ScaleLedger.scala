@@ -276,11 +276,9 @@ object ScaleLedger {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val sm = measureScale(spark, cap, small, names)
-    // release family memos between scales so the big-scale pass
+    // release every standing between scales so the big-scale pass
     // rebuilds (and therefore re-measures) its own intermediates
-    Seq(operators.CurationOps, operators.DedupOps, operators.EnvelopeOps,
-      operators.VectorOps, operators.ScalePatterns, operators.ComposedApps)
-      .foreach(_.release())
+    Prestage.release()
     val bg = measureScale(spark, cap, big, names)
     val rows = names.map { n =>
       val (rs, bs, os, gs) = sm(n)

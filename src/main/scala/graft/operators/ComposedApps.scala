@@ -15,9 +15,10 @@ import graft.functions.Oracle
   * pipeline is spec-verified (no single-result-set SQL shape). */
 object ComposedApps extends QueryModule {
 
-  /** The composed apps' only memoized intermediate is the synthesized
-    * topic family ([[graft.streaming.SyntheticTopics]]). */
-  override def release(): Unit = graft.streaming.SyntheticTopics.release()
+  /** The composed apps' only standing state is the synthesized topic
+    * family ([[graft.streaming.SyntheticTopics]]). */
+  override def standings: Seq[graft.Standing[_]] =
+    graft.streaming.SyntheticTopics.all
 
   /** g5: the composed DwdBaseLog output summarized per route — dirty
     * side-output counts, the keyed is_new state machine (stated as

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Standing, Tables}
 import graft.operators.TextOps.{fingerprint, hits, tokenize}
 
 /** End-to-end training-data curation over the documents table — the
@@ -42,10 +42,17 @@ object CurationOps extends QueryModule {
     * (agg + join) shuffles over the edge list, and the round count is
     * O(log² n) — independent of component diameter, unlike plain
     * min-label propagation whose O(diameter) driver-synchronized loop is
-    * the latency killer on long chains at 100 TB. Memoized: c1 and c2
-    * both consume it. */
-  private val labelMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * the latency killer on long chains at 100 TB. Standing: c1, c2 and
+    * the other cluster readers share one build. Nothing is persisted —
+    * the rounds' local checkpoints carry it — so release has nothing to
+    * drop. */
+  private[graft] val clusterLabels = Standing("labels", Set(
+    "c1_dedup_clusters", "c2_kept_corpus", "c14_canonical_selection",
+    "c16_data_card", "c22_dedup_waterfall", "c23_cluster_split",
+    "c26_cluster_size_dist")) { (s, dir) =>
+    componentLabels(s,
+      DedupOps.nearDupPairs(s, dir).select(col("a_id"), col("b_id")))
+  }(_ => ())
 
   /** Observed round count of the last clusterLabels computation (a round
     * = one large-star + one small-star); spec-asserted O(log² n). */
@@ -78,20 +85,6 @@ object CurationOps extends QueryModule {
     val fromSelf = mins.select(col("u").as("src"), col("m").as("dst"))
     fromNbrs.union(fromSelf).distinct()
   }
-
-  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    labelMemo.getOrElseUpdate((s, dir),
-      componentLabels(s,
-        DedupOps.nearDupPairs(s, dir).select(col("a_id"), col("b_id"))))
-
-  /** Queries whose plan reads the memoized component labels — lives
-    * next to [[clusterLabels]] (like DedupOps.nearDupConsumers next to
-    * its prestage) so adding a label-reading query and updating the
-    * prestage trigger are one edit, not two. */
-  private[graft] val labelConsumers: Set[String] = Set(
-    "c1_dedup_clusters", "c2_kept_corpus", "c14_canonical_selection",
-    "c16_data_card", "c22_dedup_waterfall", "c23_cluster_split",
-    "c26_cluster_size_dist")
 
   /** Connected-component labels for an ARBITRARY symmetric pair frame
     * (a_id, b_id) — the generic core behind c1 and the
@@ -167,14 +160,8 @@ object CurationOps extends QueryModule {
         .groupBy(col("id")).agg(min(col("label")).as("label"))
   }
 
-  override def release(): Unit = {
-    labelMemo.values.foreach(_.unpersist(false))
-    labelMemo.clear()
-    decontamCandMemo.values.foreach(_.unpersist(false))
-    decontamCandMemo.clear()
-    postingMemo.values.foreach(_.unpersist(false))
-    postingMemo.clear()
-  }
+  override def standings: Seq[Standing[_]] =
+    Seq(clusterLabels, decontamCandidates, trainPostings)
 
   /** c1: near-duplicate clusters — connected components of the verified
     * d3 pair graph; cluster id = min member doc_id. */
@@ -704,31 +691,14 @@ object CurationOps extends QueryModule {
       .agg(countDistinct(col("shingle")).as("shared_ct"))
       .filter(col("shared_ct") >= minShared)
 
-  /** Memoized + persisted ranked train posting lists for the standing
-    * c5/c15 decontamination pass (train = !isEvalDoc): at 100 TB this
-    * is a staging table maintained next to the eval registry, built
-    * once per release gate — both lenses read it. Released at the
-    * family boundary like the label memo. */
-  private val postingMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def trainPostings(s: SparkSession, dir: String): DataFrame =
-    postingMemo.getOrElseUpdate((s, dir), {
-      val train = Tables(s, dir, "documents").filter(!isEvalDoc)
-      val df = rankedTrainPostings(train, DedupOps.bucketCliqueCap)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager: build cost charged to the prestage/first toucher
-      df
-    })
-
-  /** Queries whose plan reads the memoized train posting lists. */
-  private[graft] val postingConsumers: Set[String] =
-    Set("c5_contamination", "c15_decontam_report")
-
-  private[graft] def prestageTrainPostings(s: SparkSession,
-      dir: String): Unit = {
-    trainPostings(s, dir)
-    ()
+  /** Ranked train posting lists for the standing c5/c15
+    * decontamination pass (train = !isEvalDoc): at 100 TB this is a
+    * staging table maintained next to the eval registry, built once per
+    * release gate — both lenses read it. */
+  private val trainPostings = Standing.frame("train_postings",
+    Set("c5_contamination", "c15_decontam_report")) { (s, dir) =>
+    rankedTrainPostings(Tables(s, dir, "documents").filter(!isEvalDoc),
+      DedupOps.bucketCliqueCap)
   }
 
   private def contamination(s: SparkSession, dir: String): DataFrame = {
@@ -849,32 +819,15 @@ object CurationOps extends QueryModule {
   /** The SHARED c15/c17 candidate list: the standing [[DedupOps
     * .docBands]] table split by the eval predicate (signatures are
     * per-doc, so the filter is identical to re-signing each side) and
-    * bucket-joined. Memoized + persisted like the module's label
-    * memo — both decontamination queries read one build (at 100 TB: a
-    * staging table maintained next to the signature table), and the
-    * candidate plan stays visible to the PerfSpec band-bucket guard
-    * inside the cached relation. Released at the family boundary. */
-  private val decontamCandMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def decontamCandidates(s: SparkSession, dir: String): DataFrame =
-    decontamCandMemo.getOrElseUpdate((s, dir), {
-      val bands = DedupOps.docBands(s, dir)
-      val isEval = isEvalDoc
-      val df = bandCandidates(bands.filter(!isEval), bands.filter(isEval))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager: build cost charged to the prestage/first toucher
-      df
-    })
-
-  /** Queries whose plan reads the memoized decontam candidates. */
-  private[graft] val decontamConsumers: Set[String] =
-    Set("c15_decontam_report", "c17_fuzzy_contamination")
-
-  private[graft] def prestageDecontamCandidates(s: SparkSession,
-      dir: String): Unit = {
-    decontamCandidates(s, dir)
-    ()
+    * bucket-joined. Both decontamination queries read one build (at
+    * 100 TB: a staging table maintained next to the signature table),
+    * and the candidate plan stays visible to the PerfSpec band-bucket
+    * guard inside the cached relation. */
+  private val decontamCandidates = Standing.frame("decontam_cand",
+    Set("c15_decontam_report", "c17_fuzzy_contamination")) { (s, dir) =>
+    val bands = DedupOps.docBands(s, dir)
+    val isEval = isEvalDoc
+    bandCandidates(bands.filter(!isEval), bands.filter(isEval))
   }
 
   /** Exact-Jaccard verify over a candidate list. Per-SIDE token

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Standing, Tables}
 import graft.operators.TextOps.{fingerprint, tokenize}
 
 /** Near-duplicate detection for training-data curation — the scale path
@@ -60,13 +60,6 @@ object DedupOps extends QueryModule {
     * duplicate cluster. */
   val bucketCliqueCap = 20
 
-  /** The candidate-pair table is the shared upstream of d2/d3/d5 — a real
-    * dedup pipeline materializes it once (at 100 TB: a checkpointed
-    * intermediate table), so the module memoizes + persists it per
-    * (session, dir) instead of recomputing the minhash scan per query. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** Universal-hash constants — single source of truth lives with the
     * native expression ([[graft.plans.MinhashSignature]]); re-exported
     * here for the oracle SQL builders. */
@@ -83,65 +76,24 @@ object DedupOps extends QueryModule {
     array_min(transform(col("hs"),
       h => (h * lit(aK(k)) + lit(bK(k))) % lit(P))).as(s"mh$k")
 
-  /** Candidate pairs from LSH banding (distinct over bands, a < b). */
-  private def candidatePairs(s: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((s, dir), {
-      val df = candidatePairsUncached(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager: build cost charged to the first consumer
-      df
-    })
-
-  /** Materialize the suite-shared near-dup intermediate (LSH candidate
-    * pairs + Jaccard-verified pairs) ahead of any consumer. A production
-    * pipeline runs this stage ONCE and checkpoints it before the eight
-    * downstream readers (d2/d3/d5/d7/d9, c1/c12/c14 and their
-    * dependents) — [[graft.Bench]] calls it so per-query timings measure
-    * each consumer's own work, not which one happened to sort first. */
-  private[graft] def prestageNearDup(s: SparkSession, dir: String): Unit = {
-    nearDupPairs(s, dir) // builds + counts the candidate memo too
-    ()
-  }
-
-  /** Queries whose plan reads the memoized candidate/verified-pair
-    * intermediate (NOT d8 — it reads only the band table below). */
-  private[graft] val nearDupConsumers: Set[String] = Set(
+  /** Queries whose plan reads the candidate/verified-pair intermediate
+    * (NOT d8 — it reads only the band table below). */
+  private val nearDupReaders: Set[String] = Set(
     "d2_lsh_candidates", "d3_near_dup_pairs", "d5_shingle_jaccard",
     "d7_minhash_estimate", "d9_threshold_sweep", "d11_lsh_tuning",
     "c1_dedup_clusters", "c12_pagerank_authority",
     "c14_canonical_selection", "c16_data_card", "c22_dedup_waterfall")
 
-  /** Queries whose plan reads the memoized band table — the candidate
-    * consumers reach it transitively (candidatePairsUncached reads the
-    * memo); d8 reads it directly without needing the pair build, and
-    * the two decontamination queries split it by the eval predicate
-    * (band signatures are per-doc, so filtering the standing table is
-    * identical to re-signing each side). */
-  private[graft] val bandConsumers: Set[String] =
-    nearDupConsumers ++ Set("d8_crawl_dedup", "d12_bucket_skew",
-      "c15_decontam_report", "c17_fuzzy_contamination")
+  /** Candidate pairs from LSH banding (distinct over bands, a < b) — the
+    * shared upstream of d2/d3/d5; a real dedup pipeline materializes it
+    * once (at 100 TB: a checkpointed intermediate table) instead of
+    * recomputing the minhash scan per query. Built by the near-dup
+    * stage on its way. */
+  private val candidatePairs = Standing.frame("candidates", nearDupReaders,
+    prestaged = false)((s, dir) => pairsFromRanked(docBands(s, dir)))
 
-  /** Materialize just the standing band table (the d8 dependency, and
-    * the first stage of the candidate build). */
-  private[graft] def prestageBands(s: SparkSession, dir: String): Unit = {
-    docBands(s, dir)
-    ()
-  }
-
-  override def release(): Unit = {
-    memo.values.foreach(_.unpersist(false))
-    memo.clear()
-    verifiedMemo.values.foreach(_.unpersist(false))
-    verifiedMemo.clear()
-    simhashMemo.values.foreach(_.unpersist(false))
-    simhashMemo.clear()
-    bandsMemo.values.foreach(_.unpersist(false))
-    bandsMemo.clear()
-    crawlCandMemo.values.foreach(_.unpersist(false))
-    crawlCandMemo.clear()
-    shingleMemo.values.foreach(_.unpersist(false))
-    shingleMemo.clear()
-  }
+  override def standings: Seq[Standing[_]] = Seq(docBands, candidatePairs,
+    nearDupPairs, docShingles, simhashSig, crawlCandidates)
 
   /** Stacked LSH band rows for an arbitrary (doc_id, source, text)
     * frame — the per-shard signature stage, shared by the batch
@@ -233,22 +185,19 @@ object DedupOps extends QueryModule {
     * directly ([[pairsFromRanked]]); the d8/decontamination builds
     * rank their OWN bucket keys (store-only / train-only subsets)
     * but reuse the signatures. */
-  private val bandsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private[operators] def docBands(s: SparkSession, dir: String): DataFrame =
-    bandsMemo.getOrElseUpdate((s, dir), {
-      val df = rankBands(stackedBands(
-        Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager: build cost charged to the first consumer
-      df
-    })
-
-  private def candidatePairsUncached(s: SparkSession, dir: String): DataFrame =
-    pairsFromRanked(docBands(s, dir))
+  /** Read by the candidate consumers transitively (through the pair
+    * build), by d8 directly, and by the two decontamination queries,
+    * which split it by the eval predicate (band signatures are per-doc,
+    * so filtering the standing table is identical to re-signing each
+    * side). */
+  private[operators] val docBands = Standing.frame("bands",
+    nearDupReaders ++ Set("d8_crawl_dedup", "d12_bucket_skew",
+      "c15_decontam_report", "c17_fuzzy_contamination")) { (s, dir) =>
+    rankBands(stackedBands(
+      Tables(s, dir, "documents")
+        .select(col("doc_id"), col("source"), col("text"))
+        .repartition(s.sparkContext.defaultParallelism)))
+  }
 
   /** Generic near-dup verify for arbitrary docs (the d3 pipeline shape). */
   private[graft] def nearDupPairsFor(docs: DataFrame,
@@ -293,20 +242,15 @@ object DedupOps extends QueryModule {
     * table is memoized + persisted like the candidate table — a real
     * pipeline materializes the verified pair list once (at 100 TB: a
     * checkpointed table) rather than re-running the verify join per
-    * consumer. Released with the candidate memo at the family boundary. */
-  private val verifiedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private[operators] def nearDupPairs(s: SparkSession, dir: String): DataFrame =
-    verifiedMemo.getOrElseUpdate((s, dir), {
-      val d = Tables(s, dir, "documents")
-      val docToks = d.select(col("doc_id"),
-        array_distinct(tokenize(col("text"))).as("elems"))
-      val df = verifyByJaccard(candidatePairs(s, dir), docToks,
-        "jaccard", jaccardThreshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    })
+    * consumer. */
+  private[operators] val nearDupPairs = Standing.frame("neardup",
+    nearDupReaders) { (s, dir) =>
+    val d = Tables(s, dir, "documents")
+    val docToks = d.select(col("doc_id"),
+      array_distinct(tokenize(col("text"))).as("elems"))
+    verifyByJaccard(candidatePairs(s, dir), docToks,
+      "jaccard", jaccardThreshold)
+  }
 
   /** Per-doc distinct HASHED word-bigram (2-shingle) arrays — the
     * verify-side element table d5 joins against the candidate pairs.
@@ -319,30 +263,20 @@ object DedupOps extends QueryModule {
     * shingling move (the minhash stage already lives on these hashes).
     * A hash collision inside one pair's union shifts that pair's
     * Jaccard; the DuckDB oracle replays the identical hash, so the
-    * check stays exact. Memoized + persisted like the band/candidate
+    * check stays exact. A standing table like the band/candidate
     * tables: in a real pipeline the shingle scan is materialized once
     * next to the signature stage. */
-  private val shingleMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def docShingles(s: SparkSession, dir: String): DataFrame =
-    shingleMemo.getOrElseUpdate((s, dir), {
-      // bind the token array to a named column first so the element_at
-      // lambda indexes a materialized array instead of re-splitting text
-      val df = Tables(s, dir, "documents")
-        .select(col("doc_id"), tokenize(col("text")).as("tk"))
-        .select(col("doc_id"), array_distinct(transform(
-          sequence(lit(1), size(col("tk")) - 1),
-          i => conv(substring(md5(concat(element_at(col("tk"), i),
-            lit(" "), element_at(col("tk"), i + 1))), 1, 8), 16, 10)
-            .cast(LongType))).as("elems"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager: build cost visible at stage time, not first use
-      df
-    })
-
-  private[graft] def prestageShingles(s: SparkSession, dir: String): Unit = {
-    docShingles(s, dir)
-    ()
+  private val docShingles = Standing.frame("shingles",
+    Set("d5_shingle_jaccard")) { (s, dir) =>
+    // bind the token array to a named column first so the element_at
+    // lambda indexes a materialized array instead of re-splitting text
+    Tables(s, dir, "documents")
+      .select(col("doc_id"), tokenize(col("text")).as("tk"))
+      .select(col("doc_id"), array_distinct(transform(
+        sequence(lit(1), size(col("tk")) - 1),
+        i => conv(substring(md5(concat(element_at(col("tk"), i),
+          lit(" "), element_at(col("tk"), i + 1))), 1, 8), 16, 10)
+          .cast(LongType))).as("elems"))
   }
 
   /** d5: word-bigram (2-shingle) Jaccard over the LSH candidates — the
@@ -365,14 +299,12 @@ object DedupOps extends QueryModule {
     * signature is the majority vote of the doc's distinct-token hashes
     * (vote sum > 0 ⟺ set-count·2 > token count), each vote a codegen'd
     * size∘filter traversal of the hash array — no row blowup, no
-    * 32-column groupBy. Memoized + persisted: d4 projects it, d6
-    * self-joins it (two scans of one 5000-row table instead of two runs
-    * of the signature pipeline). */
-  private val simhashMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def simhashSig(s: SparkSession, dir: String): DataFrame =
-    simhashMemo.getOrElseUpdate((s, dir), {
+    * 32-column groupBy. Shared, built by the first reader: d4 projects
+    * it, d6 self-joins it (two scans of one 5000-row table instead of
+    * two runs of the signature pipeline). */
+  private val simhashSig = Standing.frame("simhash",
+    Set("d4_simhash", "d6_simhash_near_pairs"), prestaged = false) {
+    (s, dir) =>
       val d = Tables(s, dir, "documents")
       val withHs = d.select(col("doc_id"),
         transform(array_distinct(tokenize(col("text"))),
@@ -386,12 +318,9 @@ object DedupOps extends QueryModule {
       // documents.parquet is one row group → one input partition; spread
       // the persisted signatures so the d6 broadcast-probe (≈19M pair
       // evaluations at sf0.1) parallelizes instead of running one task
-      val df = withHs.select(col("doc_id"), simhash.as("simhash"))
+      withHs.select(col("doc_id"), simhash.as("simhash"))
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager: build cost charged to the first consumer
-      df
-    })
+  }
 
   /** d4: the SimHash signature table with its 8-bit hamming-bucket bands
     * (the LSH layout for d6's candidate generation). */
@@ -496,49 +425,36 @@ object DedupOps extends QueryModule {
     * the incremental step actually pays: the cross-shard bucket join
     * plus its own verify work. */
   /** The d8 cross-shard candidate list — new-crawl×store band-bucket
-    * collisions off the standing [[docBands]] table. Memoized +
-    * persisted like the other family intermediates (the verify stage
-    * references it twice: the token id-prune and the verify join —
-    * one build serves both, its plan stays visible to the PerfSpec
-    * band-bucket guard inside the cached relation, and the blocks go
-    * away with the family release). */
-  private val crawlCandMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def crawlCandidates(s: SparkSession, dir: String): DataFrame =
-    crawlCandMemo.getOrElseUpdate((s, dir), {
-      val newSrc = Tables(s, dir, "documents").agg(
-        max(col("source")).as("new_src"))
-      val bands = docBands(s, dir).crossJoin(broadcast(newSrc))
-      val newB = bands.filter(col("source") === col("new_src"))
-        .select(col("doc_id").as("a_id"), col("band_no"), col("band_sig"))
-      // the STORE side carries the same per-bucket budget as the batch
-      // clique join ([[bucketCliqueCap]]): each new doc meets at most
-      // cap store partners per band — "is this already in the corpus,
-      // and what does it best match among the bucket's first members"
-      // stays answerable, while a mega-cluster store bucket (2.6k docs
-      // at sf0.1) no longer multiplies every colliding new doc by its
-      // full membership (the 384× shuffle growth the round-8
-      // SCALE_LEDGER measured on this query)
-      val wOld = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band_no"), col("band_sig"))
-        .orderBy(col("b_id"))
-      val oldB = bands.filter(col("source") =!= col("new_src"))
-        .select(col("doc_id").as("b_id"), col("band_no"), col("band_sig"))
-        .withColumn("rk", row_number().over(wOld))
-        .filter(col("rk") <= bucketCliqueCap)
-        .drop("rk")
-      val df = newB.join(oldB, Seq("band_no", "band_sig"))
-        .select(col("a_id"), col("b_id")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager: build cost charged to the prestage/first toucher
-      df
-    })
-
-  private[graft] def prestageCrawlCandidates(s: SparkSession,
-      dir: String): Unit = {
-    crawlCandidates(s, dir)
-    ()
+    * collisions off the standing [[docBands]] table. A standing like the
+    * other family intermediates (the verify stage references it twice:
+    * the token id-prune and the verify join — one build serves both, its
+    * plan stays visible to the PerfSpec band-bucket guard inside the
+    * cached relation, and the blocks go away with the family release). */
+  private val crawlCandidates = Standing.frame("crawl_cand",
+    Set("d8_crawl_dedup")) { (s, dir) =>
+    val newSrc = Tables(s, dir, "documents").agg(
+      max(col("source")).as("new_src"))
+    val bands = docBands(s, dir).crossJoin(broadcast(newSrc))
+    val newB = bands.filter(col("source") === col("new_src"))
+      .select(col("doc_id").as("a_id"), col("band_no"), col("band_sig"))
+    // the STORE side carries the same per-bucket budget as the batch
+    // clique join ([[bucketCliqueCap]]): each new doc meets at most
+    // cap store partners per band — "is this already in the corpus,
+    // and what does it best match among the bucket's first members"
+    // stays answerable, while a mega-cluster store bucket (2.6k docs
+    // at sf0.1) no longer multiplies every colliding new doc by its
+    // full membership (the 384× shuffle growth the round-8
+    // SCALE_LEDGER measured on this query)
+    val wOld = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("band_no"), col("band_sig"))
+      .orderBy(col("b_id"))
+    val oldB = bands.filter(col("source") =!= col("new_src"))
+      .select(col("doc_id").as("b_id"), col("band_no"), col("band_sig"))
+      .withColumn("rk", row_number().over(wOld))
+      .filter(col("rk") <= bucketCliqueCap)
+      .drop("rk")
+    newB.join(oldB, Seq("band_no", "band_sig"))
+      .select(col("a_id"), col("b_id")).distinct()
   }
 
   private def crawlDedup(s: SparkSession, dir: String): DataFrame = {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Standing, Tables}
 import graft.functions.{Fns, Oracle}
 
 /** The ODS→DWD envelope layer: CDC-envelope construction/parsing, dirty
@@ -81,56 +81,33 @@ object EnvelopeOps extends QueryModule {
       map(lit("order_status"), oldStatus).as("old"))).as("envelope"))
   }
 
+  /** The queries that parse the order topic — the readers of both
+    * envelope standings. */
+  private val envelopeReaders =
+    Set("p4_status_transitions", "p9_column_pruning", "s2_cdc_parse")
+
   /** The synthesized order-CDC topic strings — FIXTURE construction
     * (the topic bytes exist upstream of every consumer in a real
     * deployment; this sandbox synthesizes them because it has no
-    * broker), memoized and prestaged exactly like the g5/g6/k12
+    * broker), standing and prestaged exactly like the g5/g6/k12
     * [[graft.streaming.SyntheticTopics]] logs. The PARSE stays query
     * work: it runs inside the first consumer's timed window via
     * [[parsedEnvelopes]]. */
-  private val topicMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private[graft] def orderTopic(s: SparkSession, dir: String): DataFrame =
-    topicMemo.getOrElseUpdate((s, dir), {
-      val df = orderEnvelopes(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    })
-
-  /** Consumers of the parsed envelope layer, for the Prestage gate. */
-  private[graft] val orderTopicConsumers: Set[String] =
-    Set("p4_status_transitions", "p9_column_pruning", "s2_cdc_parse")
-
-  private[graft] def prestageOrderTopic(s: SparkSession, dir: String): Unit = {
-    orderTopic(s, dir); ()
-  }
+  private val orderTopic = Standing.frame("topic_order_env",
+    envelopeReaders)(orderEnvelopes)
 
   /** Envelope parse is the shared upstream of the ODS queries —
     * materialized once per (session, dir), the ODS-topic-as-table shape
     * (a real deployment reads the parsed envelope layer once per batch,
-    * not once per consumer). */
-  private val envMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private[operators] def parsedEnvelopes(s: SparkSession, dir: String): DataFrame =
-    envMemo.getOrElseUpdate((s, dir), {
-      val df = orderTopic(s, dir)
-        .select(from_json(col("envelope"), odsDbSchema).as("e"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager: the PARSE cost lands in the first consumer's timing, later
-      // consumers measure steady-state reads of the cached table
-      df.count()
-      df
-    })
-
-  override def release(): Unit = {
-    envMemo.values.foreach(_.unpersist(false))
-    envMemo.clear()
-    topicMemo.values.foreach(_.unpersist(false))
-    topicMemo.clear()
+    * not once per consumer). Not prestaged: the PARSE cost lands in the
+    * first consumer's timing, later consumers measure steady-state reads
+    * of the cached table. */
+  private[operators] val parsedEnvelopes = Standing.frame("parsed_envelopes",
+    envelopeReaders, prestaged = false) { (s, dir) =>
+    orderTopic(s, dir).select(from_json(col("envelope"), odsDbSchema).as("e"))
   }
+
+  override def standings: Seq[Standing[_]] = Seq(orderTopic, parsedEnvelopes)
 
   /** S2/P1/P3: parse the envelope stream, apply the DimApp validity ETL,
     * project map fields, and aggregate per op type. */

@@ -104,6 +104,17 @@ object PublisherServer {
           s"limit must be an integer in 1..$MaxLimit, got '$v'"))
     }
 
+  /** `date=`: absent or `0` → `latest` (the newest day); otherwise a
+    * strict `yyyy-MM-dd` calendar day, checked on the driver before any
+    * query runs (a malformed day would otherwise match no partition and
+    * answer an empty 200). */
+  private def dateOf(ex: HttpExchange, latest: => String): String =
+    param(ex, "date").filter(_ != "0").fold(latest) { v =>
+      if (v.matches("\\d{4}-\\d{2}-\\d{2}") &&
+          scala.util.Try(java.time.LocalDate.parse(v)).isSuccess) v
+      else throw new BadRequest(s"date must be a yyyy-MM-dd day or 0, got '$v'")
+    }
+
   private def reply(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type",
@@ -186,20 +197,17 @@ object PublisherServer {
         .getOrElse(graft.Tables.parquet(s, store)
           .agg(max(col("cur_date").cast("string"))).head().getString(0))
 
-    def dateOf(ex: HttpExchange, store: String): String =
-      param(ex, "date").filter(_ != "0").getOrElse(latestDay(store))
-
     // GET /gmv?date=yyyy-MM-dd → {"status":0,"data":<gmv>}
     // (TradeStatsController.java:24-36)
     endpoint(server, "/gmv") { ex =>
-      val day = dateOf(ex, orderStore)
+      val day = dateOf(ex, latestDay(orderStore))
       gmvEnvelope(ServingApi.gmv(s, orderStore, day).head())
     }
 
     // GET /province?date=… → mapData envelope
     // (TradeStatsController.java:38-56)
     endpoint(server, "/province") { ex =>
-      val day = dateOf(ex, orderStore)
+      val day = dateOf(ex, latestDay(orderStore))
       val prov =
         if (orderIsDetail) ServingApi.province(s, orderStore, day)
         else ServingApi.provinceDws(s, orderStore, day)
@@ -212,7 +220,7 @@ object PublisherServer {
     // (TrafficStatsController.java:26-47)
     endpoint(server, "/ch") { ex =>
       val limit = limitOf(ex)
-      val day = dateOf(ex, trafficStore)
+      val day = dateOf(ex, latestDay(trafficStore))
       chEnvelope(chUv(s, trafficStore, day, limit).collect())
     }
 
@@ -237,9 +245,6 @@ object PublisherServer {
   def startNavigated(s: SparkSession, dir: String, port: Int)
       : Publisher = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-
-    def dateOf(ex: HttpExchange, latest: => String): String =
-      param(ex, "date").filter(_ != "0").getOrElse(latest)
 
     endpoint(server, "/gmv") { ex =>
       val day = dateOf(ex, ServingApi.navLatestDay(s, dir))

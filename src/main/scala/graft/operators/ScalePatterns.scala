@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Standing, Tables}
 import graft.functions.{Fns, Oracle}
 
 /** Skew- and shuffle-management patterns that only matter at cluster
@@ -350,31 +350,10 @@ object ScalePatterns extends QueryModule {
     * arithmetic, identical in both engines. This shared stage emits the
     * per-row (layout, bucket, ck, dt) assignment; x4 aggregates spans
     * from it and x8 prices the file skipping it buys — so it is
-    * memoized + persisted per (session, dir) like the Lloyd assignment
-    * (a production pipeline lands the layout ONCE before pricing it),
-    * released at the family boundary by the bench harness. */
-  private val zorderMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def zorderBucketRows(s: SparkSession, dir: String): DataFrame =
-    // synchronized builder — a racing duplicate would strand its
-    // persisted copy (release() only unpersists the stored value)
-    zorderMemo.synchronized(zorderMemo.getOrElseUpdate((s, dir), {
-      val df = zorderBucketRowsCompute(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }))
-
-  /** Queries whose plan reads the memoized z-order assignment. */
-  private[graft] val zorderConsumers: Set[String] =
-    Set("x4_zorder_layout", "x8_skip_stats")
-
-  private[graft] def prestageZorderAssign(s: SparkSession, dir: String)
-      : Unit = {
-    zorderBucketRows(s, dir)
-    ()
-  }
+    * a standing frame like the Lloyd assignment (a production pipeline
+    * lands the layout ONCE before pricing it). */
+  private val zorderBucketRows = Standing.frame("zorder_assign",
+    Set("x4_zorder_layout", "x8_skip_stats"))(zorderBucketRowsCompute)
 
   /** 8-bit Morton spread (standard magic numbers). Both dimensions are
     * first min-max normalized to 8 bits — interleaving RAW values lets
@@ -694,36 +673,28 @@ object ScalePatterns extends QueryModule {
     * column (asserted in PerfSpec): the scan opens 3 of 80 partition
     * directories. At 100 TB this is THE difference between touching
     * ~4 TB and touching all of it — the join itself broadcasts the
-    * 3-row dim. The memoized store build runs in the Bench prestage
-    * (its own printed line, outside the timed loop, like every other
-    * standing family intermediate); outside Bench it is charged to
-    * the first x9 caller. */
-  private val dppMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
+    * 3-row dim. At 100 TB the month-partitioned rollup is a STANDING
+    * table the DPP query reads, not something the query itself writes:
+    * the store build runs in the Bench prestage (its own printed line,
+    * outside the timed loop); outside Bench it is charged to the first
+    * x9 caller. */
+  private val dppStoreDir = Standing.stored("dpp_store",
+    Set("x9_dpp_prune")) { (s, dir, sd) =>
+    Tables(s, dir, "orders")
+      .select(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"),
+        col("o_orderkey"), money(col("o_totalprice")).as("amount"))
+      .repartition(col("order_month")) // one compacted file per partition
+      .write.mode("overwrite").partitionBy("order_month").parquet(sd)
+    sd
+  }((_, _, _) => ())
 
-  private[operators] def dppStoreDir(s: SparkSession, dir: String): String =
-    dppMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x9_store_").toString
-      // Bench releases the store at the family boundary; Verify and the
-      // specs never call release(), so a shutdown hook keeps those JVMs
-      // from stranding a full orders-rollup copy under /tmp.
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      Tables(s, dir, "orders")
-        .select(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"),
-          col("o_orderkey"), money(col("o_totalprice")).as("amount"))
-        .repartition(col("order_month")) // one compacted file per partition
-        .write.mode("overwrite").partitionBy("order_month").parquet(sd)
-      sd
-    })
+  /** Release of a summary registered with AggRewrite as `<table>@<dir>`. */
+  private def unregisterNav(table: String): (SparkSession, String, Any) => Unit =
+    (s, dir, _) => graft.plans.AggRewrite.unregister(s, s"$table@$dir")
 
-  private def rmTree(sd: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(sd))
-  }
+  /** Release of a zone-map index registered as `<table>@<dir>`. */
+  private def unregisterSkip(table: String): (SparkSession, String, Any) => Unit =
+    (s, dir, _) => graft.plans.SkipIndex.unregister(s, s"$table@$dir")
 
   /** The runtime-only dim: months ranked by urgent-order count. */
   private[operators] def dppTopMonths(s: SparkSession, dir: String): DataFrame = {
@@ -738,16 +709,8 @@ object ScalePatterns extends QueryModule {
       .select(col("order_month"), col("urgent_ct"))
   }
 
-  /** Materialize the x9 partitioned store outside the timed loop — at
-    * 100 TB the month-partitioned rollup is a STANDING table the DPP
-    * query reads, not something the query itself writes. */
-  private[graft] def prestageDppStore(s: SparkSession, dir: String): Unit = {
-    dppStoreDir(s, dir)
-    ()
-  }
-
   private def dppPrune(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dppStoreDir(s, dir))
+    Tables.parquet(s, dppStoreDir(s, dir))
       .join(broadcast(dppTopMonths(s, dir)), "order_month")
       .groupBy(col("order_month"), col("urgent_ct"))
       .agg(count(lit(1)).as("order_ct"),
@@ -760,7 +723,7 @@ object ScalePatterns extends QueryModule {
   // made automatic: the query keeps raw-table semantics, the optimizer
   // proves derivability and swaps the scan. The summary is a STANDING
   // table at 100 TB (built once per day-partition by the streaming DWS
-  // job); here its one-pass build is memoized + prestaged like the x9
+  // job); here its one-pass build is a prestaged standing like the x9
   // DPP store, and the queries opt in explicitly via AggRewrite.navigate
   // so the other 200+ queries' recorded plans stay byte-stable (the
   // session-wide route via GraftExtensions is spec-covered separately).
@@ -780,30 +743,15 @@ object ScalePatterns extends QueryModule {
     ("min_price", "min", money(col("o_totalprice"))),
     ("max_price", "max", money(col("o_totalprice"))))
 
-  private val navMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Materialize + register the (day, priority) orders summary once per
-    * (session, dir); returns the summary path. */
-  private[graft] def navSummaryDir(s: SparkSession, dir: String): String =
-    // synchronized builder: a racing duplicate would also REGISTER, and
-    // the losing registration would point at a deleted temp dir (the
-    // SyntheticTopics race, with a registry attached) — these builds are
-    // one-per-(session, dir), so a lock is the simple sound form
-    navMemo.synchronized(navMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x14_summary_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      graft.plans.AggRewrite.materialize(s, s"orders_day_priority@$dir",
-        Tables(s, dir, "orders"), navKeys, navMeasures, sd)
-      sd
-    }))
-
-  private[graft] def prestageNavSummary(s: SparkSession, dir: String)
-      : Unit = {
-    navSummaryDir(s, dir)
-    ()
-  }
+    * (session, dir); the value is the summary path. */
+  private[graft] val navSummaryDir = Standing.stored("agg_nav_summary",
+    Set("x14_agg_rewrite", "x15_rollup_navigate",
+      "x16_rollup_sets_navigate", "x18_avg_navigate")) { (s, dir, sd) =>
+    graft.plans.AggRewrite.materialize(s, s"orders_day_priority@$dir",
+      Tables(s, dir, "orders"), navKeys, navMeasures, sd)
+    sd
+  }(unregisterNav("orders_day_priority"))
 
   /** x14: monthly serving rollup written against the RAW orders table —
     * AggRewrite proves the month is a coarsening of the summary's day
@@ -835,41 +783,30 @@ object ScalePatterns extends QueryModule {
     * and the candidate query phrase their day key over that projected
     * column. Summary grain (day, event_type); the serving query asks
     * channel totals for one day range. */
-  private val navEventsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  private[graft] def navEventsDir(s: SparkSession, dir: String): String =
-    // synchronized builder — same reasoning as navSummaryDir
-    navEventsMemo.synchronized(navEventsMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x17_summary_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      graft.plans.AggRewrite.materialize(s, s"events_day_channel@$dir",
-        Tables(s, dir, "events"),
-        keys = Seq(
-          "event_day" -> curDate(nsToSec(col("ts"))),
-          "event_type" -> col("event_type")),
-        measures = Seq(
-          ("value_sum", "sum", money(col("value"))),
-          ("cnt", "count_star", lit(1)),
-          ("user_min", "min", col("user_id")),
-          ("user_max", "max", col("user_id")),
-          // per-group HLL registers: the approximate-UV partial x20
-          // navigates onto (merge is register-max — estimate bit-equal)
-          ("uv_sketch", "hll", col("user_id")),
-          // per-group EXACT id bitmap (the reference's Doris
-          // BITMAP_UNION UV column): idempotent union makes
-          // count(DISTINCT user_id) re-derivable bit-exactly — x22
-          ("uv_bitmap", "bitmap", col("user_id"))),
-        path = sd)
-      sd
-    }))
-
-  private[graft] def prestageNavEvents(s: SparkSession, dir: String)
-      : Unit = {
-    navEventsDir(s, dir)
-    ()
-  }
+  private[graft] val navEventsDir = Standing.stored("agg_nav_events",
+    Set("x17_events_navigate", "x20_hll_navigate",
+      "x22_bitmap_distinct_navigate", "x24_bitmap_overlap",
+      "x26_bitmap_retention")) { (s, dir, sd) =>
+    graft.plans.AggRewrite.materialize(s, s"events_day_channel@$dir",
+      Tables(s, dir, "events"),
+      keys = Seq(
+        "event_day" -> curDate(nsToSec(col("ts"))),
+        "event_type" -> col("event_type")),
+      measures = Seq(
+        ("value_sum", "sum", money(col("value"))),
+        ("cnt", "count_star", lit(1)),
+        ("user_min", "min", col("user_id")),
+        ("user_max", "max", col("user_id")),
+        // per-group HLL registers: the approximate-UV partial x20
+        // navigates onto (merge is register-max — estimate bit-equal)
+        ("uv_sketch", "hll", col("user_id")),
+        // per-group EXACT id bitmap (the reference's Doris
+        // BITMAP_UNION UV column): idempotent union makes
+        // count(DISTINCT user_id) re-derivable bit-exactly — x22
+        ("uv_bitmap", "bitmap", col("user_id"))),
+      path = sd)
+    sd
+  }(unregisterNav("events_day_channel"))
 
   private def eventsNavigate(s: SparkSession, dir: String): DataFrame = {
     navEventsDir(s, dir)
@@ -920,27 +857,14 @@ object ScalePatterns extends QueryModule {
     ("line_cnt", "count_star", lit(1)),
     ("qty_max", "max", col("l_quantity")))
 
-  private val navLineMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Materialize + register the part-grain lineitem summary once per
     * (session, dir) — the fact side of the x19 join navigation. */
-  private[graft] def navLineDir(s: SparkSession, dir: String): String =
-    // synchronized builder — same reasoning as navSummaryDir
-    navLineMemo.synchronized(navLineMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x19_summary_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      graft.plans.AggRewrite.materialize(s, s"lineitem_by_part@$dir",
-        Tables(s, dir, "lineitem"), navLineKeys, navLineMeasures, sd)
-      sd
-    }))
-
-  private[graft] def prestageNavLine(s: SparkSession, dir: String)
-      : Unit = {
-    navLineDir(s, dir)
-    ()
-  }
+  private[graft] val navLineDir = Standing.stored("agg_nav_lineitem",
+    Set("x19_dim_join_navigate")) { (s, dir, sd) =>
+    graft.plans.AggRewrite.materialize(s, s"lineitem_by_part@$dir",
+      Tables(s, dir, "lineitem"), navLineKeys, navLineMeasures, sd)
+    sd
+  }(unregisterNav("lineitem_by_part"))
 
   /** x19: the reference's /province serving shape (the Flink job
     * denormalizes province_name before the Doris write —
@@ -1031,9 +955,6 @@ object ScalePatterns extends QueryModule {
 
   // ---- x23: zone-map file skipping, EXECUTED (plans/SkipIndex) ------
 
-  private val skipMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Land the Z-ORDERED orders store ONCE per (session, dir) and
     * register its zone-map index — the x4/x12 "range" layout actually
     * written (`repartitionByRange` on the Morton value + a within-file
@@ -1042,44 +963,33 @@ object ScalePatterns extends QueryModule {
     * time). Same rows as the orders table, just placed so that files
     * carry tight extents on BOTH (o_custkey, o_orderdate); returns the
     * store path. */
-  private[graft] def skipStoreDir(s: SparkSession, dir: String): String =
-    // synchronized builder — same reasoning as navSummaryDir
-    skipMemo.synchronized(skipMemo.getOrElseUpdate((s, dir), {
-      import org.apache.spark.sql.types.LongType
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x23_store_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      val store = s"$sd/orders_z"
-      // the x4 interleave ([[mortonSpread]]/[[mortonNorm]] — one shared
-      // definition with the x8 pricing): pure codegen'd integer math
-      val o = Tables(s, dir, "orders")
-      val raw = o.withColumn("__ck", col("o_custkey").cast(LongType))
-        .withColumn("__dt",
-          datediff(col("o_orderdate"), lit("1992-01-01")).cast(LongType))
-      val mm = raw.agg(
-        min(col("__ck")).as("ck_min"), max(col("__ck")).as("ck_max"),
-        min(col("__dt")).as("dt_min"), max(col("__dt")).as("dt_max"))
-      raw.crossJoin(broadcast(mm))
-        .withColumn("__zval",
-          mortonSpread(mortonNorm(col("__ck"), col("ck_min"),
-              col("ck_max")))
-            .bitwiseOR(shiftleft(
-              mortonSpread(mortonNorm(col("__dt"), col("dt_min"),
-                col("dt_max"))), 1)))
-        .repartitionByRange(16, col("__zval"))
-        .sortWithinPartitions("__zval")
-        .select(o.columns.map(col).toSeq: _*)
-        .write.mode("overwrite").parquet(store)
-      graft.plans.SkipIndex.register(s, s"orders_z@$dir", store,
-        Seq("o_custkey", "o_orderdate"))
-      sd
-    }))
-
-  private[graft] def prestageSkipStore(s: SparkSession, dir: String)
-      : Unit = {
-    skipStoreDir(s, dir)
-    ()
-  }
+  private[graft] val skipStoreDir = Standing.stored("skip_store",
+    Set("x23_skipscan_prune")) { (s, dir, sd) =>
+    val store = s"$sd/orders_z"
+    // the x4 interleave ([[mortonSpread]]/[[mortonNorm]] — one shared
+    // definition with the x8 pricing): pure codegen'd integer math
+    val o = Tables(s, dir, "orders")
+    val raw = o.withColumn("__ck", col("o_custkey").cast(LongType))
+      .withColumn("__dt",
+        datediff(col("o_orderdate"), lit("1992-01-01")).cast(LongType))
+    val mm = raw.agg(
+      min(col("__ck")).as("ck_min"), max(col("__ck")).as("ck_max"),
+      min(col("__dt")).as("dt_min"), max(col("__dt")).as("dt_max"))
+    raw.crossJoin(broadcast(mm))
+      .withColumn("__zval",
+        mortonSpread(mortonNorm(col("__ck"), col("ck_min"),
+            col("ck_max")))
+          .bitwiseOR(shiftleft(
+            mortonSpread(mortonNorm(col("__dt"), col("dt_min"),
+              col("dt_max"))), 1)))
+      .repartitionByRange(16, col("__zval"))
+      .sortWithinPartitions("__zval")
+      .select(o.columns.map(col).toSeq: _*)
+      .write.mode("overwrite").parquet(store)
+    graft.plans.SkipIndex.register(s, s"orders_z@$dir", store,
+      Seq("o_custkey", "o_orderdate"))
+    sd
+  }(unregisterSkip("orders_z"))
 
   /** x23: the x8 skip estimator EXECUTED — a two-dimensional box
     * predicate (customer range × one order year) over the z-ordered
@@ -1095,7 +1005,7 @@ object ScalePatterns extends QueryModule {
     * SkipIndexSpec asserts the plan-level file count actually drops. */
   private def skipScanPrune(s: SparkSession, dir: String): DataFrame = {
     val store = s"${skipStoreDir(s, dir)}/orders_z"
-    val q = s.read.parquet(store)
+    val q = Tables.parquet(s, store)
       .filter(col("o_custkey") <= 75 &&
         col("o_orderdate") >= "1995-01-01" &&
         col("o_orderdate") <= "1995-12-31")
@@ -1109,9 +1019,6 @@ object ScalePatterns extends QueryModule {
   // ---- x25: zone maps OVER a partitioned store (SkipIndex ∘ Catalyst
   // partition pruning) ------------------------------------------------
 
-  private val partSkipMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Land the MONTH-partitioned, custkey-clustered orders store ONCE
     * per (session, dir) and register its zone-map index — the
     * reference's serving layout exactly (`partition parYYYYMMDD`,
@@ -1123,36 +1030,25 @@ object ScalePatterns extends QueryModule {
     * prunes the PARTITIONS from the directory values, the zone maps
     * prune FILES inside the surviving partitions from the registered
     * per-file stats. Returns the store parent dir. */
-  private[graft] def partSkipStoreDir(s: SparkSession, dir: String)
-      : String =
-    // synchronized builder — same reasoning as navSummaryDir
-    partSkipMemo.synchronized(partSkipMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x25_store_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      val store = s"$sd/orders_part"
-      val o = Tables(s, dir, "orders")
-        .withColumn("o_month",
-          date_format(col("o_orderdate"), "yyyy-MM"))
-      // ~4 files per month partition: range-place on (month, custkey)
-      // so each task's slice lands in one (or two adjacent) months
-      // with a tight custkey extent — the within-partition clustering
-      // an ingest job would write anyway (x12's range layout per day)
-      val months = o.agg(countDistinct(col("o_month"))).head.getLong(0)
-      o.repartitionByRange((months * 4).toInt.max(4),
-          col("o_month"), col("o_custkey"))
-        .sortWithinPartitions("o_month", "o_custkey")
-        .write.mode("overwrite").partitionBy("o_month").parquet(store)
-      graft.plans.SkipIndex.register(s, s"orders_part@$dir", store,
-        Seq("o_custkey"))
-      sd
-    }))
-
-  private[graft] def prestagePartSkipStore(s: SparkSession, dir: String)
-      : Unit = {
-    partSkipStoreDir(s, dir)
-    ()
-  }
+  private[graft] val partSkipStoreDir = Standing.stored("part_skip_store",
+    Set("x25_part_skipscan")) { (s, dir, sd) =>
+    val store = s"$sd/orders_part"
+    val o = Tables(s, dir, "orders")
+      .withColumn("o_month",
+        date_format(col("o_orderdate"), "yyyy-MM"))
+    // ~4 files per month partition: range-place on (month, custkey)
+    // so each task's slice lands in one (or two adjacent) months
+    // with a tight custkey extent — the within-partition clustering
+    // an ingest job would write anyway (x12's range layout per day)
+    val months = o.agg(countDistinct(col("o_month"))).head.getLong(0)
+    o.repartitionByRange((months * 4).toInt.max(4),
+        col("o_month"), col("o_custkey"))
+      .sortWithinPartitions("o_month", "o_custkey")
+      .write.mode("overwrite").partitionBy("o_month").parquet(store)
+    graft.plans.SkipIndex.register(s, s"orders_part@$dir", store,
+      Seq("o_custkey"))
+    sd
+  }(unregisterSkip("orders_part"))
 
   /** x25: file skipping composed WITH partition pruning — a quarter-
     * scoped, customer-bounded box over the month-partitioned store.
@@ -1170,7 +1066,7 @@ object ScalePatterns extends QueryModule {
     * proves both prunings semantically invisible. */
   private def partSkipScan(s: SparkSession, dir: String): DataFrame = {
     val store = s"${partSkipStoreDir(s, dir)}/orders_part"
-    val q = s.read.parquet(store)
+    val q = Tables.parquet(s, store)
       .filter(col("o_month") >= "1995-01" && col("o_month") <= "1995-03" &&
         col("o_custkey") <= 75)
       .groupBy(col("o_orderpriority"))
@@ -1183,9 +1079,6 @@ object ScalePatterns extends QueryModule {
   // ---- x28: zone maps over a MULTI-LEVEL partitioned store
   // (SkipIndex ∘ nested Catalyst partition pruning) -------------------
 
-  private val nestedSkipMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Land the (year, month)-NESTED, custkey-clustered orders store
     * ONCE per (session, dir) and register its zone-map index — the
     * reference's real store layouts nest the date dimension
@@ -1196,37 +1089,26 @@ object ScalePatterns extends QueryModule {
     * pass and the fence are layout-agnostic (they key on leaf files),
     * so multi-level stores ride the same catalog. Returns the store
     * parent dir. */
-  private[graft] def nestedSkipStoreDir(s: SparkSession, dir: String)
-      : String =
-    // synchronized builder — same reasoning as navSummaryDir
-    nestedSkipMemo.synchronized(nestedSkipMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x28_store_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      val store = s"$sd/orders_nested"
-      val o = Tables(s, dir, "orders")
-        .withColumn("o_year", date_format(col("o_orderdate"), "yyyy"))
-        .withColumn("o_mm", date_format(col("o_orderdate"), "MM"))
-      // ~4 files per (year, month) leaf: range-place on the partition
-      // keys + custkey so each leaf's files carry tight disjoint
-      // custkey extents (the ingest layout x12 plans per day)
-      val leaves = o.agg(countDistinct(col("o_year"), col("o_mm")))
-        .head.getLong(0)
-      o.repartitionByRange((leaves * 4).toInt.max(4),
-          col("o_year"), col("o_mm"), col("o_custkey"))
-        .sortWithinPartitions("o_year", "o_mm", "o_custkey")
-        .write.mode("overwrite").partitionBy("o_year", "o_mm")
-        .parquet(store)
-      graft.plans.SkipIndex.register(s, s"orders_nested@$dir", store,
-        Seq("o_custkey"))
-      sd
-    }))
-
-  private[graft] def prestageNestedSkipStore(s: SparkSession, dir: String)
-      : Unit = {
-    nestedSkipStoreDir(s, dir)
-    ()
-  }
+  private[graft] val nestedSkipStoreDir = Standing.stored(
+    "nested_skip_store", Set("x28_nested_skipscan")) { (s, dir, sd) =>
+    val store = s"$sd/orders_nested"
+    val o = Tables(s, dir, "orders")
+      .withColumn("o_year", date_format(col("o_orderdate"), "yyyy"))
+      .withColumn("o_mm", date_format(col("o_orderdate"), "MM"))
+    // ~4 files per (year, month) leaf: range-place on the partition
+    // keys + custkey so each leaf's files carry tight disjoint
+    // custkey extents (the ingest layout x12 plans per day)
+    val leaves = o.agg(countDistinct(col("o_year"), col("o_mm")))
+      .head.getLong(0)
+    o.repartitionByRange((leaves * 4).toInt.max(4),
+        col("o_year"), col("o_mm"), col("o_custkey"))
+      .sortWithinPartitions("o_year", "o_mm", "o_custkey")
+      .write.mode("overwrite").partitionBy("o_year", "o_mm")
+      .parquet(store)
+    graft.plans.SkipIndex.register(s, s"orders_nested@$dir", store,
+      Seq("o_custkey"))
+    sd
+  }(unregisterSkip("orders_nested"))
 
   /** x28: file skipping composed with TWO-LEVEL partition pruning — a
     * quarter-scoped, customer-bounded box over the (year, month)-
@@ -1243,7 +1125,7 @@ object ScalePatterns extends QueryModule {
     * proves both prunings semantically invisible. */
   private def nestedSkipScan(s: SparkSession, dir: String): DataFrame = {
     val store = s"${nestedSkipStoreDir(s, dir)}/orders_nested"
-    val q = s.read.parquet(store)
+    val q = Tables.parquet(s, store)
       .filter(col("o_year") === "1995" &&
         col("o_mm") >= "01" && col("o_mm") <= "03" &&
         col("o_custkey") <= 75)
@@ -1257,9 +1139,6 @@ object ScalePatterns extends QueryModule {
   // ---- x27: the serving stack COMPOSED — navigation onto a
   // CLUSTERED summary, zone maps pruning the summary scan -----------
 
-  private val navMonthMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Materialize + register the (month, priority) orders summary ONCE
     * per (session, dir), range-CLUSTERED on the month key, and
     * register a zone-map index over its store. At 100 TB a summary is
@@ -1267,32 +1146,25 @@ object ScalePatterns extends QueryModule {
     * of rows); clustering the summary on its serving key is what lets
     * data skipping prune the SUMMARY scan — Doris sorts its aggregate
     * tables on the key prefix for exactly this reason. */
-  private[graft] def navMonthDir(s: SparkSession, dir: String): String =
-    // synchronized builder — same reasoning as navSummaryDir
-    navMonthMemo.synchronized(navMonthMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x27_summary_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      graft.plans.AggRewrite.materialize(s,
-        s"orders_month_priority@$dir", Tables(s, dir, "orders"),
-        keys = Seq(
-          "order_month" -> substring(
-            date_format(col("o_orderdate"), "yyyy-MM-dd"), 1, 7),
-          "o_orderpriority" -> col("o_orderpriority")),
-        measures = Seq(
-          ("amount_sum", "sum", money(col("o_totalprice"))),
-          ("price_cnt", "count", money(col("o_totalprice"))),
-          ("order_ct", "count_star", lit(1))),
-        path = sd, clusterBy = Seq("order_month"))
-      graft.plans.SkipIndex.register(s, s"orders_month_sum@$dir",
-        s"$sd/v0", Seq("order_month"))
-      sd
-    }))
-
-  private[graft] def prestageNavMonth(s: SparkSession, dir: String)
-      : Unit = {
-    navMonthDir(s, dir)
-    ()
+  private[graft] val navMonthDir = Standing.stored("nav_month_summary",
+    Set("x27_summary_skipscan")) { (s, dir, sd) =>
+    graft.plans.AggRewrite.materialize(s,
+      s"orders_month_priority@$dir", Tables(s, dir, "orders"),
+      keys = Seq(
+        "order_month" -> substring(
+          date_format(col("o_orderdate"), "yyyy-MM-dd"), 1, 7),
+        "o_orderpriority" -> col("o_orderpriority")),
+      measures = Seq(
+        ("amount_sum", "sum", money(col("o_totalprice"))),
+        ("price_cnt", "count", money(col("o_totalprice"))),
+        ("order_ct", "count_star", lit(1))),
+      path = sd, clusterBy = Seq("order_month"))
+    graft.plans.SkipIndex.register(s, s"orders_month_sum@$dir",
+      s"$sd/v0", Seq("order_month"))
+    sd
+  } { (s, dir, sd) =>
+    unregisterNav("orders_month_priority")(s, dir, sd)
+    unregisterSkip("orders_month_sum")(s, dir, sd)
   }
 
   /** x27: BOTH rewrites in one query — the serving stack composed.
@@ -1382,35 +1254,22 @@ object ScalePatterns extends QueryModule {
 
   // ---- x21: navigation THROUGH a multi-hop dim chain ---------------
 
-  private val navCustMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Materialize + register the customer-grain orders summary once per
     * (session, dir) — the fact side of x21's dim-chain navigation (the
     * user-grain DWS table of a real deployment; ~10 orders/customer =
     * 10× compression at every scale). */
-  private[graft] def navCustDir(s: SparkSession, dir: String): String =
-    // synchronized builder — same reasoning as navSummaryDir
-    navCustMemo.synchronized(navCustMemo.getOrElseUpdate((s, dir), {
-      val sd = java.nio.file.Files
-        .createTempDirectory("graft_x21_summary_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(sd)))
-      graft.plans.AggRewrite.materialize(s, s"orders_by_cust@$dir",
-        Tables(s, dir, "orders"),
-        keys = Seq("o_custkey" -> col("o_custkey")),
-        measures = Seq(
-          ("sum_price", "sum", money(col("o_totalprice"))),
-          ("price_cnt", "count", money(col("o_totalprice"))),
-          ("cnt", "count_star", lit(1))),
-        path = sd)
-      sd
-    }))
-
-  private[graft] def prestageNavCust(s: SparkSession, dir: String)
-      : Unit = {
-    navCustDir(s, dir)
-    ()
-  }
+  private[graft] val navCustDir = Standing.stored("agg_nav_cust",
+    Set("x21_province_navigate")) { (s, dir, sd) =>
+    graft.plans.AggRewrite.materialize(s, s"orders_by_cust@$dir",
+      Tables(s, dir, "orders"),
+      keys = Seq("o_custkey" -> col("o_custkey")),
+      measures = Seq(
+        ("sum_price", "sum", money(col("o_totalprice"))),
+        ("price_cnt", "count", money(col("o_totalprice"))),
+        ("cnt", "count_star", lit(1))),
+      path = sd)
+    sd
+  }(unregisterNav("orders_by_cust"))
 
   /** x21: the reference's /province serving query in its LITERAL shape
     * — revenue by geography dim NAME, two dimension hops from the fact
@@ -1498,59 +1357,45 @@ object ScalePatterns extends QueryModule {
   // keyed on the SHARED catalog state, not the session: two sessions
   // over one catalog (spark.newSession()) must reuse one build — a
   // per-session key would let the second build DROP/rewrite the table
-  // out from under the first session's live plans. The value keeps the
-  // creating session (for DROP at release) and the temp-dir base (so
-  // release can actually delete the data — external tables only
-  // decatalog on DROP). ConcurrentHashMap.computeIfAbsent (NOT
-  // TrieMap.getOrElseUpdate, which may evaluate the builder twice under
-  // contention) because the build is DESTRUCTIVE: a losing duplicate
-  // build would DROP + rewrite the same catalog tables out from under
-  // the winner's live plans — computeIfAbsent blocks the second caller
-  // until the single build completes.
-  private val bucketMemo = new java.util.concurrent.ConcurrentHashMap[
-    (AnyRef, String), (SparkSession, String, String, String)]()
-
-  private[graft] def bucketTables(s: SparkSession, dir: String)
-      : (String, String) = {
-    val (_, lt, ot, _) = bucketMemo.computeIfAbsent((s.sharedState, dir), _ => {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .take(4).map("%02x".format(_)).mkString
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_x11_store_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(base)))
-      val lt = s"graft_x11_lineitem_$tag"
-      val ot = s"graft_x11_orders_$tag"
-      s.sql(s"DROP TABLE IF EXISTS $lt")
-      s.sql(s"DROP TABLE IF EXISTS $ot")
-      // the standing layout carries every column the co-located join
-      // family needs (x11's rollup AND the DWD order-detail wide table)
-      // — parquet column pruning keeps each consumer's scan narrow, so
-      // one layout serves all fact⋈fact joins on the order key
-      Tables(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-          col("l_tax"))
-        .repartition(x11Buckets, col("l_orderkey"))
-        .write.mode("overwrite").bucketBy(x11Buckets, "l_orderkey")
-        .sortBy("l_orderkey").option("path", s"$base/lineitem")
-        .saveAsTable(lt)
-      Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_orderpriority"))
-        .repartition(x11Buckets, col("o_orderkey"))
-        .write.mode("overwrite").bucketBy(x11Buckets, "o_orderkey")
-        .sortBy("o_orderkey").option("path", s"$base/orders")
-        .saveAsTable(ot)
-      (s, lt, ot, base)
-    })
+  // out from under the first session's live plans. The build is
+  // DESTRUCTIVE (DROP + rewrite of the catalog tables), so a racing
+  // caller must wait for the one build rather than run its own — the
+  // per-key build lock. Release DROPs the tables in the creating
+  // session; the temp dir then goes with the standing, since DROP only
+  // decatalogs an external table.
+  private[graft] val bucketTables = Standing.stored("bucket_tables",
+    Set("x11_bucket_join", "sql_dwd_order_detail_bucketed"),
+    keyOf = (s, dir) => (s.sharedState, dir)) { (s, dir, base) =>
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8"))
+      .take(4).map("%02x".format(_)).mkString
+    val lt = s"graft_x11_lineitem_$tag"
+    val ot = s"graft_x11_orders_$tag"
+    s.sql(s"DROP TABLE IF EXISTS $lt")
+    s.sql(s"DROP TABLE IF EXISTS $ot")
+    // the standing layout carries every column the co-located join
+    // family needs (x11's rollup AND the DWD order-detail wide table)
+    // — parquet column pruning keeps each consumer's scan narrow, so
+    // one layout serves all fact⋈fact joins on the order key
+    Tables(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+        col("l_quantity"), col("l_extendedprice"), col("l_discount"),
+        col("l_tax"))
+      .repartition(x11Buckets, col("l_orderkey"))
+      .write.mode("overwrite").bucketBy(x11Buckets, "l_orderkey")
+      .sortBy("l_orderkey").option("path", s"$base/lineitem")
+      .saveAsTable(lt)
+    Tables(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+        col("o_orderpriority"))
+      .repartition(x11Buckets, col("o_orderkey"))
+      .write.mode("overwrite").bucketBy(x11Buckets, "o_orderkey")
+      .sortBy("o_orderkey").option("path", s"$base/orders")
+      .saveAsTable(ot)
     (lt, ot)
-  }
-
-  private[graft] def prestageBucketTables(s: SparkSession, dir: String)
-      : Unit = {
-    bucketTables(s, dir)
-    ()
+  } { case (s, _, (lt, ot)) =>
+    scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $lt"))
+    scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $ot"))
   }
 
   private def bucketJoin(s: SparkSession, dir: String): DataFrame = {
@@ -1563,63 +1408,10 @@ object ScalePatterns extends QueryModule {
         moneySum(col("l_extendedprice")).as("revenue"))
   }
 
-  override def release(): Unit = {
-    dppMemo.values.foreach(rmTree)
-    dppMemo.clear()
-    zorderMemo.values.foreach(_.unpersist(false))
-    zorderMemo.clear()
-    // unregister only THIS module's summaries (clear() would drop a
-    // user's own registrations on the shared session) and delete both
-    // temp stores — the two memos share (session, dir) keys, so they
-    // must be walked separately or one dir leaks
-    navMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.AggRewrite.unregister(s, s"orders_day_priority@$dir")
-      rmTree(sd)
-    }
-    navEventsMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.AggRewrite.unregister(s, s"events_day_channel@$dir")
-      rmTree(sd)
-    }
-    navLineMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.AggRewrite.unregister(s, s"lineitem_by_part@$dir")
-      rmTree(sd)
-    }
-    navCustMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.AggRewrite.unregister(s, s"orders_by_cust@$dir")
-      rmTree(sd)
-    }
-    skipMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.SkipIndex.unregister(s, s"orders_z@$dir")
-      rmTree(sd)
-    }
-    partSkipMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.SkipIndex.unregister(s, s"orders_part@$dir")
-      rmTree(sd)
-    }
-    nestedSkipMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.SkipIndex.unregister(s, s"orders_nested@$dir")
-      rmTree(sd)
-    }
-    navMonthMemo.foreach { case ((s, dir), sd) =>
-      graft.plans.AggRewrite.unregister(s, s"orders_month_priority@$dir")
-      graft.plans.SkipIndex.unregister(s, s"orders_month_sum@$dir")
-      rmTree(sd)
-    }
-    navMemo.clear()
-    navEventsMemo.clear()
-    navLineMemo.clear()
-    navCustMemo.clear()
-    skipMemo.clear()
-    partSkipMemo.clear()
-    nestedSkipMemo.clear()
-    navMonthMemo.clear()
-    bucketMemo.values.forEach { case (s, lt, ot, base) =>
-      scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $lt"))
-      scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $ot"))
-      rmTree(base) // DROP only decatalogs an external table
-    }
-    bucketMemo.clear()
-  }
+  override def standings: Seq[Standing[_]] = Seq(dppStoreDir,
+    zorderBucketRows, navSummaryDir, navEventsDir, skipStoreDir,
+    partSkipStoreDir, nestedSkipStoreDir, navMonthDir, navLineDir,
+    navCustDir, bucketTables)
 
   val queries = Map[String, (SparkSession, String) => DataFrame](
     "x7_table_stats" -> tableStats,

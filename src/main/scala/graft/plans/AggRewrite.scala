@@ -348,7 +348,7 @@ object AggRewrite {
     * long gone. */
   private def validateAtSign(session: SparkSession, name: String,
       pd: ProbeDefs): Unit = {
-    val raw = session.read.parquet(pd.paths.toSeq.sorted: _*)
+    val raw = graft.Tables.parquet(session, pd.paths.toSeq.sorted)
     pd.defsSql.foreach { case (n, sql) =>
       try raw.select(org.apache.spark.sql.functions.expr(sql))
         .queryExecution.analyzed
@@ -614,7 +614,7 @@ object AggRewrite {
     * re-signs it). Returns the summary frame, like [[materialize]]. */
   def attach(session: SparkSession, root: String): DataFrame = {
     val m = readManifest(session, root)
-    val base = session.read.parquet(m.basePaths: _*)
+    val base = graft.Tables.parquet(session, m.basePaths)
     val (liveSig, _) = snapshotListing(session, base)
     if (liveSig != m.baseSig) throw new IllegalStateException(
       s"cannot attach summary '${m.name}' at $root: the base changed " +
@@ -656,7 +656,7 @@ object AggRewrite {
   def attachForMaintenance(session: SparkSession, root: String)
       : DataFrame = {
     val m = readManifest(session, root)
-    val base = session.read.parquet(m.basePaths: _*)
+    val base = graft.Tables.parquet(session, m.basePaths)
     val summary = session.read.schema(m.schema).parquet(m.dataDir)
     registerInternal(session, m.name, base, m.keys, m.measures, summary,
       Some(root), m.partitionKey, Some(root), Some(m.dataDir),

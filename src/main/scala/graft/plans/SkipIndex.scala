@@ -131,7 +131,7 @@ object SkipIndex {
     * loop rather than re-registering. */
   def register(session: SparkSession, name: String, store: String,
       statsCols: Seq[String]): Unit = {
-    val df = session.read.parquet(store)
+    val df = graft.Tables.parquet(session, store)
     val colTypes = statsCols.map { c =>
       c -> df.schema(c).dataType
     }.toMap
@@ -162,7 +162,7 @@ object SkipIndex {
     val d = registry.getOrElse(session, Vector.empty)
       .find(_.name == name).getOrElse(throw new IllegalArgumentException(
         s"no skip index '$name' registered for this session"))
-    val df = session.read.parquet(d.store)
+    val df = graft.Tables.parquet(session, d.store)
     val (roots, live, uris) = listingOf(df, name)
     // unchanged by ENTRY (not by stats presence): a zero-row file has
     // an entry but no stats row, and must not be re-scanned — or
@@ -633,7 +633,7 @@ object SkipIndex {
         }
       }
       // the fence re-arm: the live listing must BE the folded one
-      val df = session.read.parquet(store)
+      val df = graft.Tables.parquet(session, store)
       val (roots, live, _) = listingOf(df, name)
       if (live != entries) {
         val changed = (live.keySet ++ entries.keySet).filter(p =>

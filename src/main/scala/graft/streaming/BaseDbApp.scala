@@ -79,10 +79,10 @@ object BaseDbApp {
     * rows (≡2 mod 3), and bootstrap-insert replays (≡0 mod 9) the ETL
     * must drop before the probe. */
   def envelopes(s: SparkSession, dir: String): DataFrame =
-    SyntheticTopics.memoized("basedb_topic_db", s, dir)(
-      envelopesUncached(s, dir))
+    SyntheticTopics.dbRoutes(s, dir)
 
-  private def envelopesUncached(s: SparkSession, dir: String): DataFrame = {
+  private[streaming] def envelopesUncached(s: SparkSession, dir: String)
+      : DataFrame = {
     def env(table: String, typ: String, data: Column): Column =
       to_json(struct(lit("gmall2024").as("database"), lit(table).as("table"),
         lit(typ).as("type"), unix_timestamp(col("o_orderdate")).as("ts"),

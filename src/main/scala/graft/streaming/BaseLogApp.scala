@@ -45,10 +45,10 @@ object BaseLogApp {
     * array, errors an err object); claimed is_new flips wrongly on
     * event_id ≡ 0 mod 3; every 97th event is truncated (dirty). */
   def logLines(s: SparkSession, dir: String): DataFrame =
-    SyntheticTopics.memoized("topic_log", s, dir)(
-      logLinesUncached(s, dir))
+    SyntheticTopics.log(s, dir)
 
-  private def logLinesUncached(s: SparkSession, dir: String): DataFrame = {
+  private[streaming] def logLinesUncached(s: SparkSession, dir: String)
+      : DataFrame = {
     val e = Tables(s, dir, "events")
     val k = get_json_object(col("props"), "$.k").cast(LongType)
     val common = struct(

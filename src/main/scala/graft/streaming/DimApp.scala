@@ -55,10 +55,10 @@ object DimApp {
     * ≡0 mod 13 / part keys ≡0 mod 11 delete at 3000. The extra acctbal/
     * brandbase fields exercise the sinkColumns pruning. */
   def envelopes(s: SparkSession, dir: String): DataFrame =
-    SyntheticTopics.memoized("dim_topic_db", s, dir)(
-      envelopesUncached(s, dir))
+    SyntheticTopics.dbDim(s, dir)
 
-  private def envelopesUncached(s: SparkSession, dir: String): DataFrame = {
+  private[streaming] def envelopesUncached(s: SparkSession, dir: String)
+      : DataFrame = {
     def env(table: String, typ: String, ts: Long, data: Column): Column =
       to_json(struct(lit("gmall2024").as("database"), lit(table).as("table"),
         lit(typ).as("type"), lit(ts).as("ts"), data.as("data")))

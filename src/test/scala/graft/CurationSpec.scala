@@ -21,7 +21,7 @@ class CurationSpec extends SparkSuite {
   }
 
   test("c1 large-star/small-star converges in O(log² n) rounds") {
-    operators.CurationOps.release() // force a fresh computation
+    operators.CurationOps.standings.foreach(_.release()) // force a fresh computation
     val labels = operators.CurationOps.clusterLabels(spark, sf)
     val n = labels.count()
     val rounds = operators.CurationOps.lastRounds

@@ -130,6 +130,17 @@ class PublisherSpec extends SparkSuite {
         assert(b == "{\"status\":1,\"msg\":\"limit must be an integer " +
           s"in 1..${PublisherServer.MaxLimit}, got '$v'\"}", b)
       }
+      // a malformed date is refused the same way, on every endpoint
+      for {
+        v <- Seq("junk", "2024-1-05", "2024-02-30", "20240105",
+          "2024-01-05x", "-1", "%272024-01-05%27")
+        path <- Seq("/gmv", "/province", "/ch")
+      } {
+        val (c, b) = get(pub.port, s"$path?date=$v")
+        assert(c == 400, s"$path date=$v: $b")
+        assert(b == "{\"status\":1,\"msg\":\"date must be a yyyy-MM-dd " +
+          s"day or 0, got '$v'\"}", b)
+      }
       // in range (and absent) still serve
       Seq("/ch?limit=1", s"/ch?limit=${PublisherServer.MaxLimit}", "/ch")
         .foreach { pq =>
