@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Dev tool: dump .explain("formatted") for every registered query — the
   * artifact for the per-round plan review ("is this the plan you'd want
   * at 100 TB?"). With an output file ending in `.md` (the default,
@@ -22,7 +24,7 @@ object Explain {
       name -> (try {
         fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-      } catch { case e: Throwable => s"FAILED: ${e.getMessage}\n" })
+      } catch { case NonFatal(e) => s"FAILED: ${e.getMessage}\n" })
     }
     def write(path: String, text: String): Unit =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -36,6 +37,9 @@ object Verify {
       // cache was evicting SMJ's extra sort codegen units, penalizing
       // SMJ for a harness reason, not an algorithmic one.
       .config("spark.ui.enabled", "false")
+      // file: without a chmod/readlink process per created file or
+      // renamed path where native libhadoop is not loaded; see LocalFs
+      .config(LocalFs.sessionConf)
       .getOrCreate()
 
   def main(args: Array[String]): Unit = {
@@ -53,7 +57,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
