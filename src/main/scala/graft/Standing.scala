@@ -132,7 +132,7 @@ object Standing {
     deleteTree(p)
   }
 
-  private def deleteTree(p: Path): Unit = {
+  private[graft] def deleteTree(p: Path): Unit = {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete()

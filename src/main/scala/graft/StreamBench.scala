@@ -2,22 +2,20 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.streaming.{BaseDbApp, BaseLogApp, CartAddUuApp, DimApp,
-  HomeDetailApp, KeywordApp, ProvinceOrderApp, SkuOrderApp,
-  StatefulStreams, TrafficPageViewApp, UserLoginApp}
+import graft.streaming.Topology
 
 /** Streaming-path benchmark — the axis every BENCH_r* artifact missed:
   * the reference is a STREAMING warehouse (BaseApp.java:22-65; ~12
   * always-on dataflow programs), and until round 9 only the batch
-  * twins were timed. This main replays the testdata through all 12
-  * composed apps as a SHARDED file stream (one shard per micro-batch
-  * via the `graft.stream.maxFilesPerTrigger` session knob, shards cut
-  * along each source's event-time order — the ordered replay a
-  * per-partition-ordered topic delivers) and records, per app:
+  * twins were timed. This main replays the testdata through the
+  * [[Topology]] fleet as a SHARDED file stream (one shard per
+  * micro-batch via the `graft.stream.maxFilesPerTrigger` session knob,
+  * shards cut along each source's event-time order by
+  * [[Topology.stage]] — the ordered replay a per-partition-ordered topic
+  * delivers) and records, per app:
   *
   *  - input rows, wall seconds, rows/sec (the throughput number),
   *  - micro-batch count and mean/max batch duration (per-batch
@@ -29,12 +27,18 @@ import graft.streaming.{BaseDbApp, BaseLogApp, CartAddUuApp, DimApp,
   *    batches-after-first-eligible delay over every emitted window
   *    (the StreamingSpec serving-freshness contract, now a recorded
   *    number; 0 = every window visible in the first batch its
-  *    watermark allows).
+  *    watermark allows). These apps run their window frame into a
+  *    probe instead of their store.
   *
-  * Plus ONE concurrent pass — the full 12-app topology live at once,
-  * the reference's actual operating mode — recording the topology
-  * wall-clock next to the sequential sum (pipelining evidence: on a
-  * shared cluster the fleet must interleave, not serialize).
+  * Plus ONE concurrent pass — [[Topology.start]] of the full 12-app
+  * fleet, every app into its real store, the reference's actual
+  * operating mode — recording the topology wall-clock next to the
+  * sequential sum (pipelining evidence: on a shared cluster the fleet
+  * must interleave, not serialize).
+  *
+  * Each of the four passes (sequential at both scales, sequential on
+  * RocksDB, concurrent) stages, stores and checkpoints under one
+  * [[Topology.withRoot]] dir, deleted when the pass ends.
   *
   * Artifacts: STREAM_BENCH.json (at SPARK_GRAFT_SF_DIR, default
   * sf0.1) and STATE_LEDGER.tsv (state rows/bytes at sf0.01 vs the
@@ -44,9 +48,6 @@ import graft.streaming.{BaseDbApp, BaseLogApp, CartAddUuApp, DimApp,
   * the committed artifacts; regenerate per round:
   * `sbt "runMain graft.StreamBench"`. */
 object StreamBench {
-
-  /** Micro-batches per app (shards per source). */
-  val shards = 4
 
   /** State-ledger growth rule (PerfSpec-style recompute, never a
     * stored verdict): state rows at the big scale may reach
@@ -64,56 +65,6 @@ object StreamBench {
   final case class AppRun(name: String, inputRows: Long, wallSec: Double,
     batches: Long, meanBatchMs: Double, maxBatchMs: Long, stateRows: Long,
     stateBytes: Long, freshnessMaxDelay: Option[Long])
-
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
-  /** Cut a source into one file per micro-batch along its event-time
-    * order (the ordered replay a per-partition-ordered topic
-    * delivers), mtimes increasing so the file source consumes them in
-    * shard order. The first shard keeps the bare `<name>.parquet` the
-    * apps' schema probes read. */
-  private def shard(df: DataFrame, order: Column, dir: String,
-      name: String): Unit = {
-    // bench PREP, not measured work: the global ntile sort is fine at
-    // replay scale (≤1M rows at sf0.1); a bigger replay would
-    // repartitionByRange
-    val withB = df.withColumn("__b", ntile(shards).over(Window.orderBy(order)))
-    (1 to shards).foreach { i =>
-      val f =
-        if (i == 1) s"$dir/$name.parquet" else s"$dir/${name}_$i.parquet"
-      withB.filter(col("__b") === i).drop("__b")
-        .coalesce(1).write.mode("overwrite").parquet(f)
-      val d = new java.io.File(f)
-      (d +: Option(d.listFiles()).getOrElse(Array.empty).toSeq)
-        .foreach(_.setLastModified(1700000000000L + i * 60000L))
-      ()
-    }
-  }
-
-  /** Stage all replay inputs for one scale into a fresh source dir. */
-  private def prepare(s: SparkSession, sfDir: String): String = {
-    val src = tmp("streambench_src")
-    shard(DimApp.envelopes(s, sfDir).unionByName(BaseDbApp.envelopes(s, sfDir)),
-      get_json_object(col("envelope"), "$.ts").cast("long"),
-      src, "envelopes")
-    shard(BaseLogApp.logLines(s, sfDir),
-      get_json_object(col("raw"), "$.ts").cast("long"), src, "logs")
-    shard(s.read.parquet(s"$sfDir/events.parquet"), col("ts"),
-      src, "events")
-    shard(s.read.parquet(s"$sfDir/orders.parquet"), col("o_orderdate"),
-      src, "orders")
-    shard(s.read.parquet(s"$sfDir/lineitem.parquet"), col("l_shipdate"),
-      src, "lineitem")
-    // dim tables the province app reads from ITS source dir
-    Seq("customer", "nation").foreach { t =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
-        java.nio.file.Paths.get(s"$src/$t.parquet"))
-      ()
-    }
-    src
-  }
 
   /** Run one app to completion and fold its progress stream. */
   private def measure(name: String, start: () => StreamingQuery)
@@ -147,7 +98,8 @@ object StreamBench {
     * the StreamingSpec freshness metric: for every emitted window, how
     * many batches AFTER the first watermark-eligible one did it take
     * to surface (0 = the serving-freshness contract holds). */
-  private def measureWindowed(name: String, df: DataFrame): AppRun = {
+  private def measureWindowed(name: String, df: DataFrame, ckpt: String)
+      : AppRun = {
     val fmt = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss")
       .withZone(java.time.ZoneOffset.UTC)
@@ -156,7 +108,7 @@ object StreamBench {
     var sqRef: StreamingQuery = null
     val run = measure(name, () => {
       val sq = df.writeStream
-        .option("checkpointLocation", tmp(s"sb_ckp_$name"))
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, id: Long) =>
           // bench instrumentation, not pipeline code: a micro-batch
@@ -196,47 +148,21 @@ object StreamBench {
       else delays.max))
   }
 
-  /** The full 12-app topology of ConcurrentAppsSpec, run sequentially
-    * for clean per-app numbers (the spec proves concurrency; the bench
-    * measures each app's own cost). */
-  private def runAll(s: SparkSession, sfDir: String): Seq[AppRun] = {
-    val src = prepare(s, sfDir)
-    def noop(df: DataFrame, name: String): () => StreamingQuery =
-      () => df.writeStream
-        .option("checkpointLocation", tmp(s"sb_ckp_$name"))
-        .outputMode("append").format("noop").start()
-    Seq(
-      measure("dim", () =>
-        DimApp.run(s, src, tmp("sb_dim"), tmp("sb_ck_dim"))),
-      measure("basedb", () =>
-        BaseDbApp.run(s, src, tmp("sb_db"), tmp("sb_ck_db"))),
-      measure("baselog", () =>
-        BaseLogApp.run(s, src, tmp("sb_log"), tmp("sb_ck_log"))),
-      measure("province_order", () =>
-        ProvinceOrderApp.run(s, src, tmp("sb_prov"), tmp("sb_ck_prov"))),
-      measure("keyword", () =>
-        KeywordApp.run(s, src, tmp("sb_kw"), tmp("sb_ck_kw"))),
-      measure("sku_order", () =>
-        SkuOrderApp.run(s, src, sfDir, tmp("sb_sku"), tmp("sb_ck_sku"))),
-      measureWindowed("traffic_channel",
-        StatefulStreams.windowedCounts(s, src)),
-      measureWindowed("user_login",
-        UserLoginApp.windowSums(UserLoginApp.flagStream(
-          UserLoginApp.logins(StatefulStreams.eventStream(s, src))).toDF())),
-      measureWindowed("cart_add",
-        CartAddUuApp.windowCounts(CartAddUuApp.uuStream(
-          CartAddUuApp.cartAdds(StatefulStreams.eventStream(s, src))).toDF())),
-      measureWindowed("home_detail",
-        HomeDetailApp.windowSums(HomeDetailApp.flagStream(
-          HomeDetailApp.pageViews(StatefulStreams.eventStream(s, src))).toDF())),
-      measureWindowed("page_view",
-        TrafficPageViewApp.windowSums(TrafficPageViewApp.measureStream(
-          TrafficPageViewApp.pageViews(
-            StatefulStreams.eventStream(s, src))).toDF())),
-      measure("daily_first",
-        noop(StatefulStreams.dailyFirstStream(s, src).toDF(),
-          "daily_first")))
-  }
+  /** The fleet run one app at a time over freshly staged inputs, for
+    * clean per-app numbers (ConcurrentAppsSpec proves concurrency; the
+    * bench measures each app's own cost). */
+  private def runAll(s: SparkSession, sfDir: String): Seq[AppRun] =
+    Topology.withRoot { root =>
+      val in = Topology.Inputs(s, Topology.stage(s, sfDir, root), sfDir)
+      Topology.fleet.map { a =>
+        a.windows match {
+          case Some(frame) =>
+            measureWindowed(a.name, frame(in), Topology.ckpt(root, a.name))
+          case None =>
+            measure(a.name, () => Topology.start(in, root, Seq(a)).head)
+        }
+      }
+    }
 
   /** One CONCURRENT pass — all 12 apps live at once over freshly
     * staged inputs (the reference's actual operating mode,
@@ -246,39 +172,15 @@ object StreamBench {
     * sequential walls it answers "do 12 apps pipeline on one cluster,
     * or serialize?" — the contention number per-app rows/sec cannot
     * see. */
-  private def runTopology(s: SparkSession, sfDir: String): (Double, Long) = {
-    val src = prepare(s, sfDir)
-    def noop(df: DataFrame, name: String): StreamingQuery =
-      df.writeStream.option("checkpointLocation", tmp(s"sbt_ckp_$name"))
-        .outputMode("append").format("noop").start()
-    val t0 = System.nanoTime()
-    val queries = Seq(
-      DimApp.run(s, src, tmp("sbt_dim"), tmp("sbt_ck1")),
-      BaseDbApp.run(s, src, tmp("sbt_db"), tmp("sbt_ck2")),
-      BaseLogApp.run(s, src, tmp("sbt_log"), tmp("sbt_ck3")),
-      ProvinceOrderApp.run(s, src, tmp("sbt_prov"), tmp("sbt_ck4")),
-      KeywordApp.run(s, src, tmp("sbt_kw"), tmp("sbt_ck5")),
-      SkuOrderApp.run(s, src, sfDir, tmp("sbt_sku"), tmp("sbt_ck6")),
-      noop(StatefulStreams.windowedCounts(s, src), "channel"),
-      noop(UserLoginApp.windowSums(UserLoginApp.flagStream(
-        UserLoginApp.logins(StatefulStreams.eventStream(s, src))).toDF()),
-        "user_login"),
-      noop(CartAddUuApp.windowCounts(CartAddUuApp.uuStream(
-        CartAddUuApp.cartAdds(StatefulStreams.eventStream(s, src))).toDF()),
-        "cart_add"),
-      noop(HomeDetailApp.windowSums(HomeDetailApp.flagStream(
-        HomeDetailApp.pageViews(StatefulStreams.eventStream(s, src))).toDF()),
-        "home_detail"),
-      noop(TrafficPageViewApp.windowSums(TrafficPageViewApp.measureStream(
-        TrafficPageViewApp.pageViews(
-          StatefulStreams.eventStream(s, src))).toDF()), "page_view"),
-      noop(StatefulStreams.dailyFirstStream(s, src).toDF(), "daily_first"))
-    try queries.foreach(_.processAllAvailable())
-    finally queries.foreach(_.stop())
-    val wall = (System.nanoTime() - t0) / 1e9
-    val rows = queries.flatMap(_.recentProgress).map(_.numInputRows).sum
-    (wall, rows)
-  }
+  private def runTopology(s: SparkSession, sfDir: String): (Double, Long) =
+    Topology.withRoot { root =>
+      val in = Topology.Inputs(s, Topology.stage(s, sfDir, root), sfDir)
+      val t0 = System.nanoTime()
+      val queries = Topology.start(in, root)
+      Topology.drain(queries)
+      val wall = (System.nanoTime() - t0) / 1e9
+      (wall, queries.flatMap(_.recentProgress).map(_.numInputRows).sum)
+    }
 
   private def fmt(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
 
@@ -346,7 +248,7 @@ object StreamBench {
 
     val (topoWall, topoRows) = runTopology(spark, big)
     val seqWall = bigRuns.map(_.wallSec).sum
-    val json = s"""{"sf":"$big","shards":$shards,""" +
+    val json = s"""{"sf":"$big","shards":${Topology.shards},""" +
       s""""topology":{"apps":12,"wall_sec":${fmt(topoWall)},""" +
       s""""input_rows":$topoRows,""" +
       s""""rows_per_sec":${fmt(topoRows / math.max(1e-9, topoWall))},""" +

@@ -2,21 +2,41 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.{BaseDbApp, BaseLogApp, DimApp, ProvinceOrderApp,
-  StatefulStreams}
+import org.apache.spark.sql.types.MapType
+import graft.streaming.{DimApp, Topology}
 
 /** The reference operates ~12 streaming applications SIMULTANEOUSLY
   * against shared Kafka topics (BaseApp.java:22-65 — every app is its
   * own main(), all consuming topic_db / topic_log at once). Every
   * composed app in this repo is spec-proven in isolation; this suite
-  * proves the missing property: N StreamingQueries in ONE SparkSession
-  * over ONE shared input stream keep their checkpoints, state stores,
-  * and sinks fully isolated — each concurrent store is byte-equal to
-  * the same app's isolated run over the same input. */
+  * proves the missing property on the [[Topology]] fleet: N
+  * StreamingQueries in ONE SparkSession over ONE shared staged input
+  * keep their checkpoints, state stores, and sinks fully isolated —
+  * each concurrent store equals the same app's isolated run over the
+  * same input. */
 class ConcurrentAppsSpec extends SparkSuite {
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def apps(names: String*): Seq[Topology.App] =
+    names.map(Topology.app)
+
+  /** Stage the shared inputs under a fresh root and run `f` on them. */
+  private def staged(f: (Topology.Inputs, String) => Unit): Unit =
+    Topology.withRoot { root =>
+      f(Topology.Inputs(spark, Topology.stage(spark, sf, root), sf), root)
+    }
+
+  /** Each app run alone to completion, one after another, under `base`. */
+  private def runIsolated(in: Topology.Inputs, base: String,
+      fleet: Seq[Topology.App]): Unit =
+    fleet.foreach(a => Topology.drain(Topology.start(in, base, Seq(a))))
+
+  /** Maps do not compare under `exceptAll`: sorted entry arrays do. */
+  private def comparable(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.toSeq.map {
+      case f if f.dataType.isInstanceOf[MapType] =>
+        array_sort(map_entries(col(f.name))).as(f.name)
+      case f => col(f.name)
+    }: _*)
 
   private def assertSame(tag: String, got: DataFrame, want: DataFrame)
       : Unit = {
@@ -26,304 +46,168 @@ class ConcurrentAppsSpec extends SparkSuite {
       s"$tag: concurrent run != isolated run")
   }
 
+  /** Every table of every app's store under `con` equals its twin under
+    * `iso`. */
+  private def assertSameStores(fleet: Seq[Topology.App], con: String,
+      iso: String): Unit =
+    fleet.foreach { a =>
+      val want = a.tables(spark, Topology.store(iso, a.name)).toMap
+      a.tables(spark, Topology.store(con, a.name)).foreach { case (t, got) =>
+        assertSame(s"${a.name}/$t", comparable(got), comparable(want(t)))
+      }
+    }
+
+  /** Start `fleet` concurrently under `base`, prove all of it is live at
+    * once, and run it to completion. */
+  private def runConcurrent(in: Topology.Inputs, base: String,
+      fleet: Seq[Topology.App]): Unit = {
+    val queries = Topology.start(in, base, fleet)
+    assert(spark.streams.active.count(queries.contains) == fleet.size,
+      s"all ${fleet.size} queries must be registered concurrently")
+    Topology.drain(queries)
+  }
+
   test("five concurrent apps over one shared stream equal their isolated runs") {
     // ONE shared CDC op-log (the reference's single topic_db): the
     // union of both config-driven apps' envelope streams — each app's
     // broadcast config probe routes ONLY its own tables and must drop
     // the other app's traffic; plus the shared log stream (topic_log)
-    val src = tmp("conc_src")
-    DimApp.envelopes(spark, sf).union(BaseDbApp.envelopes(spark, sf))
-      .write.mode("overwrite").parquet(s"$src/envelopes.parquet")
-    BaseLogApp.logLines(spark, sf).write.mode("overwrite")
-      .parquet(s"$src/logs.parquet")
-
-    // isolated twins, sequentially (each over the SAME shared input)
-    val (isoDim, isoDb, isoLog, isoProv) =
-      (tmp("iso_dim"), tmp("iso_db"), tmp("iso_log"), tmp("iso_prov"))
-    Seq(
-      DimApp.run(spark, src, isoDim, tmp("ick1")),
-      BaseDbApp.run(spark, src, isoDb, tmp("ick2")),
-      BaseLogApp.run(spark, src, isoLog, tmp("ick3")),
-      ProvinceOrderApp.run(spark, sf, isoProv, tmp("ick4"))
-    ).foreach { sq => sq.processAllAvailable(); sq.stop() }
-    val isoWin = runStreamNamed(
-      StatefulStreams.windowedCounts(spark, sf), "conc_win_iso")
-
-    // concurrent run: all five queries live at once in this session
-    val (conDim, conDb, conLog, conProv) =
-      (tmp("con_dim"), tmp("con_db"), tmp("con_log"), tmp("con_prov"))
-    val queries = Seq(
-      DimApp.run(spark, src, conDim, tmp("cck1")),
-      BaseDbApp.run(spark, src, conDb, tmp("cck2")),
-      BaseLogApp.run(spark, src, conLog, tmp("cck3")),
-      ProvinceOrderApp.run(spark, sf, conProv, tmp("cck4")),
-      StatefulStreams.windowedCounts(spark, sf).writeStream
-        .outputMode("append").format("memory")
-        .queryName("conc_win_con").start())
-    assert(spark.streams.active.count(queries.contains) == 5,
-      "all five queries must be registered concurrently")
-    try queries.foreach(_.processAllAvailable())
-    finally queries.foreach(_.stop())
-
-    // DIM stores: one merge-maintained table per configured dim
-    DimApp.configRows.foreach { cfg =>
-      assertSame(s"dim/${cfg.sink_table}",
-        DimApp.store(spark, conDim, cfg.sink_table)
-          .select(col("id"), explode(col("data"))),
-        DimApp.store(spark, isoDim, cfg.sink_table)
-          .select(col("id"), explode(col("data"))))
+    staged { (in, root) =>
+      val five = apps("dim", "basedb", "baselog", "province_order",
+        "traffic_channel")
+      runIsolated(in, s"$root/iso", five)
+      runConcurrent(in, s"$root/con", five)
+      assertSameStores(five, s"$root/con", s"$root/iso")
     }
-    // dynamic-routed DWD store (maps compare exploded)
-    assertSame("basedb",
-      BaseDbApp.store(spark, conDb)
-        .select(col("sink_table"), col("data")("id"), explode(col("data"))),
-      BaseDbApp.store(spark, isoDb)
-        .select(col("sink_table"), col("data")("id"), explode(col("data"))))
-    // all six log routes
-    BaseLogApp.routeNames.foreach { r =>
-      assertSame(s"log/$r",
-        spark.read.parquet(s"$conLog/$r"),
-        spark.read.parquet(s"$isoLog/$r"))
-    }
-    // DWS window stores
-    assertSame("province",
-      spark.read.parquet(conProv), spark.read.parquet(isoProv))
-    assertSame("windowed_counts",
-      spark.table("conc_win_con"), isoWin)
   }
-
-  private def runStreamNamed(df: DataFrame, name: String): DataFrame = {
-    val sq = df.writeStream.outputMode("append").format("memory")
-      .queryName(name).start()
-    sq.processAllAvailable()
-    sq.stop()
-    spark.table(name)
-  }
-
-  // ---- the full reference topology ---------------------------------------
-
-  /** The traffic-channel DWS serving store app: windowed counts routed
-    * into a day-partitioned (cur_date, ch, uv_ct) store — the
-    * dws_traffic_channel table the publisher's /ch endpoint reads. */
-  private def trafficChannelApp(outDir: String, ckp: String) =
-    StatefulStreams.windowedCounts(spark, sf).writeStream
-      .option("checkpointLocation", ckp)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.select(substring(col("stt"), 1, 10).as("cur_date"),
-            col("event_type").as("ch"), col("pv_ct").as("uv_ct"))
-          .write.mode("append").partitionBy("cur_date").parquet(outDir)
-        ()
-      }
-      .start()
 
   test("the full twelve-app topology runs concurrently; the publisher " +
       "serves the LIVE stores") {
-    import graft.streaming.{CartAddUuApp, HomeDetailApp, KeywordApp,
-      SkuOrderApp, TrafficPageViewApp, UserLoginApp}
     // shared inputs: one CDC op log (topic_db), one log stream
     // (topic_log, played by the events table both directly and through
     // each DWS app's own filter), one order-detail stream
-    val src = tmp("topo_src")
-    DimApp.envelopes(spark, sf).union(BaseDbApp.envelopes(spark, sf))
-      .write.mode("overwrite").parquet(s"$src/envelopes.parquet")
-    BaseLogApp.logLines(spark, sf).write.mode("overwrite")
-      .parquet(s"$src/logs.parquet")
+    staged { (in, root) =>
+      val (iso, con) = (s"$root/iso", s"$root/con")
+      runIsolated(in, iso, Topology.fleet)
+      // the concurrent topology: all twelve queries live in ONE
+      // session — the reference's BaseApp fleet over shared topics
+      runConcurrent(in, con, Topology.fleet)
+      assertSameStores(Topology.fleet, con, iso)
 
-    def userLogin = UserLoginApp.windowSums(UserLoginApp.flagStream(
-      UserLoginApp.logins(StatefulStreams.eventStream(spark, sf))).toDF())
-    def cartAdd = CartAddUuApp.windowCounts(CartAddUuApp.uuStream(
-      CartAddUuApp.cartAdds(StatefulStreams.eventStream(spark, sf))).toDF())
-    def homeDetail = HomeDetailApp.windowSums(HomeDetailApp.flagStream(
-      HomeDetailApp.pageViews(StatefulStreams.eventStream(spark, sf))).toDF())
-    def pageView = TrafficPageViewApp.windowSums(
-      TrafficPageViewApp.measureStream(TrafficPageViewApp.pageViews(
-        StatefulStreams.eventStream(spark, sf))).toDF())
-    def dailyFirst = StatefulStreams.dailyFirstStream(spark, sf).toDF()
-
-    // isolated twins, sequentially, over the SAME shared inputs
-    val (isoDim, isoDb, isoLog, isoProv, isoKw, isoSku, isoCh) =
-      (tmp("t_dim"), tmp("t_db"), tmp("t_log"), tmp("t_prov"),
-        tmp("t_kw"), tmp("t_sku"), tmp("t_ch"))
-    Seq(
-      DimApp.run(spark, src, isoDim, tmp("tck1")),
-      BaseDbApp.run(spark, src, isoDb, tmp("tck2")),
-      BaseLogApp.run(spark, src, isoLog, tmp("tck3")),
-      ProvinceOrderApp.run(spark, sf, isoProv, tmp("tck4")),
-      KeywordApp.run(spark, sf, isoKw, tmp("tck5")),
-      SkuOrderApp.run(spark, sf, sf, isoSku, tmp("tck6")),
-      trafficChannelApp(isoCh, tmp("tck7"))
-    ).foreach { sq => sq.processAllAvailable(); sq.stop() }
-    val isoUl = runStreamNamed(userLogin, "topo_ul_iso")
-    val isoCa = runStreamNamed(cartAdd, "topo_ca_iso")
-    val isoHd = runStreamNamed(homeDetail, "topo_hd_iso")
-    val isoPv = runStreamNamed(pageView, "topo_pv_iso")
-    val isoDf = runStreamNamed(dailyFirst, "topo_df_iso")
-
-    // the concurrent topology: all twelve queries live in ONE session —
-    // the reference's BaseApp fleet over shared topics
-    val (conDim, conDb, conLog, conProv, conKw, conSku, conCh) =
-      (tmp("c_dim"), tmp("c_db"), tmp("c_log"), tmp("c_prov"),
-        tmp("c_kw"), tmp("c_sku"), tmp("c_ch"))
-    def mem(df: DataFrame, name: String) =
-      df.writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-    val queries = Seq(
-      DimApp.run(spark, src, conDim, tmp("cck1")),
-      BaseDbApp.run(spark, src, conDb, tmp("cck2")),
-      BaseLogApp.run(spark, src, conLog, tmp("cck3")),
-      ProvinceOrderApp.run(spark, sf, conProv, tmp("cck4")),
-      KeywordApp.run(spark, sf, conKw, tmp("cck5")),
-      SkuOrderApp.run(spark, sf, sf, conSku, tmp("cck6")),
-      trafficChannelApp(conCh, tmp("cck7")),
-      mem(userLogin, "topo_ul_con"),
-      mem(cartAdd, "topo_ca_con"),
-      mem(homeDetail, "topo_hd_con"),
-      mem(pageView, "topo_pv_con"),
-      mem(dailyFirst, "topo_df_con"))
-    assert(spark.streams.active.count(queries.contains) == 12,
-      "all twelve queries must be registered concurrently")
-    try queries.foreach(_.processAllAvailable())
-    finally queries.foreach(_.stop())
-
-    // every store equals its isolated twin
-    DimApp.configRows.foreach { cfg =>
-      assertSame(s"dim/${cfg.sink_table}",
-        DimApp.store(spark, conDim, cfg.sink_table)
-          .select(col("id"), explode(col("data"))),
-        DimApp.store(spark, isoDim, cfg.sink_table)
-          .select(col("id"), explode(col("data"))))
+      // the serving path: the publisher reads the LIVE stores the
+      // topology just maintained (the reference's controller → Doris
+      // DWS tables), and each envelope equals the direct store
+      // aggregation
+      val conProv = Topology.store(con, "province_order")
+      val conCh = Topology.store(con, "traffic_channel")
+      val pub = graft.operators.PublisherServer.start(spark, conProv,
+        conCh, 0)
+      try {
+        def get(pathQ: String): (Int, String) = {
+          val client = java.net.http.HttpClient.newHttpClient()
+          val res = client.send(
+            java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+              s"http://127.0.0.1:${pub.port}$pathQ")).GET().build(),
+            java.net.http.HttpResponse.BodyHandlers.ofString())
+          (res.statusCode(), res.body())
+        }
+        val day = spark.read.parquet(conProv)
+          .agg(max(col("cur_date").cast("string"))).head.getString(0)
+        val (gc, gb) = get(s"/gmv?date=$day")
+        assert(gc == 200, gb)
+        val wantGmv = graft.operators.ServingApi
+          .gmv(spark, conProv, day).head.getDouble(0)
+        assert(gb == s"""{"status":0,"data":$wantGmv}""", gb)
+        val (pc, pb) = get(s"/province?date=$day")
+        assert(pc == 200, pb)
+        val wantProv = graft.operators.ServingApi
+          .provinceDws(spark, conProv, day)
+          .orderBy(col("order_amount").desc, col("province_name")).collect()
+        assert(wantProv.nonEmpty, "live province store served no rows")
+        wantProv.foreach { r =>
+          assert(pb.contains(s""""name":"${r.getString(0)}""""), pb)
+        }
+        val chDay = spark.read.parquet(conCh)
+          .agg(max(col("cur_date").cast("string"))).head.getString(0)
+        val (cc, cb) = get(s"/ch?date=$chDay&limit=3")
+        assert(cc == 200, cb)
+        val wantCh = graft.operators.PublisherServer
+          .chUv(spark, conCh, chDay, 3).collect()
+        assert(wantCh.nonEmpty, "live channel store served no rows")
+        assert(cb.contains(wantCh.map(_.getLong(1)).mkString(",")), cb)
+      } finally pub.stop()
     }
-    assertSame("basedb",
-      BaseDbApp.store(spark, conDb)
-        .select(col("sink_table"), col("data")("id"), explode(col("data"))),
-      BaseDbApp.store(spark, isoDb)
-        .select(col("sink_table"), col("data")("id"), explode(col("data"))))
-    BaseLogApp.routeNames.foreach { r =>
-      assertSame(s"log/$r", spark.read.parquet(s"$conLog/$r"),
-        spark.read.parquet(s"$isoLog/$r"))
-    }
-    Seq(("province", conProv, isoProv), ("keyword", conKw, isoKw),
-      ("sku", conSku, isoSku), ("channel", conCh, isoCh)).foreach {
-      case (tag, con, iso) =>
-        assertSame(tag, spark.read.parquet(con), spark.read.parquet(iso))
-    }
-    assertSame("user_login", spark.table("topo_ul_con"), isoUl)
-    assertSame("cart_add", spark.table("topo_ca_con"), isoCa)
-    assertSame("home_detail", spark.table("topo_hd_con"), isoHd)
-    assertSame("page_view", spark.table("topo_pv_con"), isoPv)
-    assertSame("daily_first", spark.table("topo_df_con"), isoDf)
-
-    // the serving path: the publisher reads the LIVE stores the
-    // topology just maintained (the reference's controller → Doris DWS
-    // tables), and each envelope equals the direct store aggregation
-    val pub = graft.operators.PublisherServer.start(spark, conProv,
-      conCh, 0)
-    try {
-      def get(pathQ: String): (Int, String) = {
-        val client = java.net.http.HttpClient.newHttpClient()
-        val res = client.send(
-          java.net.http.HttpRequest.newBuilder(java.net.URI.create(
-            s"http://127.0.0.1:${pub.port}$pathQ")).GET().build(),
-          java.net.http.HttpResponse.BodyHandlers.ofString())
-        (res.statusCode(), res.body())
-      }
-      val day = spark.read.parquet(conProv)
-        .agg(max(col("cur_date").cast("string"))).head.getString(0)
-      val (gc, gb) = get(s"/gmv?date=$day")
-      assert(gc == 200, gb)
-      val wantGmv = graft.operators.ServingApi
-        .gmv(spark, conProv, day).head.getDouble(0)
-      assert(gb == s"""{"status":0,"data":$wantGmv}""", gb)
-      val (pc, pb) = get(s"/province?date=$day")
-      assert(pc == 200, pb)
-      val wantProv = graft.operators.ServingApi
-        .provinceDws(spark, conProv, day)
-        .orderBy(col("order_amount").desc, col("province_name")).collect()
-      assert(wantProv.nonEmpty, "live province store served no rows")
-      wantProv.foreach { r =>
-        assert(pb.contains(s""""name":"${r.getString(0)}""""), pb)
-      }
-      val chDay = spark.read.parquet(conCh)
-        .agg(max(col("cur_date").cast("string"))).head.getString(0)
-      val (cc, cb) = get(s"/ch?date=$chDay&limit=3")
-      assert(cc == 200, cb)
-      val wantCh = graft.operators.PublisherServer
-        .chUv(spark, conCh, chDay, 3).collect()
-      assert(wantCh.nonEmpty, "live channel store served no rows")
-      assert(cb.contains(wantCh.map(_.getLong(1)).mkString(",")), cb)
-    } finally pub.stop()
   }
 
   test("one app crashing mid-topology leaves the others untouched and " +
       "restarts from its checkpoint to convergence") {
     import graft.streaming.VersionedParquetMergeSink
-    val src = tmp("crash_src")
-    DimApp.envelopes(spark, sf).union(BaseDbApp.envelopes(spark, sf))
-      .write.mode("overwrite").parquet(s"$src/envelopes.parquet")
-    BaseLogApp.logLines(spark, sf).write.mode("overwrite")
-      .parquet(s"$src/logs.parquet")
+    staged { (in, root) =>
+      val (iso, con) = (s"$root/iso", s"$root/con")
+      // isolated twins for the surviving apps
+      val survivors = apps("baselog", "province_order")
+      runIsolated(in, iso, survivors)
 
-    // isolated twins for the surviving apps
-    val (isoLog, isoProv) = (tmp("x_log"), tmp("x_prov"))
-    Seq(BaseLogApp.run(spark, src, isoLog, tmp("xck1")),
-      ProvinceOrderApp.run(spark, sf, isoProv, tmp("xck2")))
-      .foreach { sq => sq.processAllAvailable(); sq.stop() }
+      // the DimApp replica with a crash injected AFTER the first table's
+      // merge committed but BEFORE the batch is acknowledged — the same
+      // worst-moment injection as PipelineSpec's W10 case, now with two
+      // sibling apps live in the session (the reference restarts each
+      // BaseApp independently under its failure-rate policy,
+      // BaseSQLApp.java:31)
+      val (dimStore, dimCk) =
+        (Topology.store(con, "dim"), Topology.ckpt(con, "dim"))
+      @volatile var crash = true
+      val schema = spark.read.parquet(s"${in.src}/envelopes.parquet").schema
+      def dimSrc = spark.readStream.schema(schema)
+        .parquet(s"${in.src}/envelopes*.parquet")
+      val crashingDim = DimApp.parsedDims(spark, dimSrc).writeStream
+        .option("checkpointLocation", dimCk)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.persist()
+          try DimApp.configRows.zipWithIndex.foreach { case (cfg, i) =>
+            new VersionedParquetMergeSink(s"$dimStore/${cfg.sink_table}",
+              "id", "seq", "op", Seq("data")).merge(
+              batch.filter(col("sink_table") === cfg.sink_table), batchId)
+            if (crash && i == 0) {
+              crash = false
+              throw new RuntimeException("injected mid-topology crash")
+            }
+          } finally { batch.unpersist(); () }
+        }
+        .start()
+      val live = Topology.start(in, con, survivors)
 
-    // the DimApp replica with a crash injected AFTER the first table's
-    // merge committed but BEFORE the batch is acknowledged — the same
-    // worst-moment injection as PipelineSpec's W10 case, now with two
-    // sibling apps live in the session (the reference restarts each
-    // BaseApp independently under its failure-rate policy,
-    // BaseSQLApp.java:31)
-    val (dimStore, dimCk) = (tmp("x_dim"), tmp("x_dimck"))
-    @volatile var crash = true
-    val schema = spark.read.parquet(s"$src/envelopes.parquet").schema
-    def dimSrc = spark.readStream.schema(schema)
-      .parquet(s"$src/envelopes*.parquet")
-    val crashingDim = DimApp.parsedDims(spark, dimSrc).writeStream
-      .option("checkpointLocation", dimCk)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try DimApp.configRows.zipWithIndex.foreach { case (cfg, i) =>
-          new VersionedParquetMergeSink(s"$dimStore/${cfg.sink_table}",
-            "id", "seq", "op", Seq("data")).merge(
-            batch.filter(col("sink_table") === cfg.sink_table), batchId)
-          if (crash && i == 0) {
-            crash = false
-            throw new RuntimeException("injected mid-topology crash")
-          }
-        } finally { batch.unpersist(); () }
+      // the dim app dies mid-batch...
+      intercept[Exception] { crashingDim.processAllAvailable() }
+      // ...while the survivors finish their work untouched
+      Topology.drain(live)
+      assertSameStores(survivors, con, iso)
+
+      // restart the dead app from ITS OWN checkpoint: the unacknowledged
+      // batch replays onto the already-merged store idempotently and the
+      // store converges to the batch-twin answer
+      Topology.drain(Topology.start(in, con, apps("dim")))
+      DimApp.configRows.foreach { cfg =>
+        assertSame(s"recovered/${cfg.sink_table}",
+          DimApp.store(spark, dimStore, cfg.sink_table)
+            .select(col("id"), col("seq"), explode(col("data"))),
+          DimApp.batchSnapshot(spark, sf, cfg.sink_table)
+            .select(col("id"), col("seq"), explode(col("data"))))
       }
-      .start()
-    val (conLog, conProv) = (tmp("y_log"), tmp("y_prov"))
-    val survivors = Seq(
-      BaseLogApp.run(spark, src, conLog, tmp("yck1")),
-      ProvinceOrderApp.run(spark, sf, conProv, tmp("yck2")))
-
-    // the dim app dies mid-batch...
-    intercept[Exception] { crashingDim.processAllAvailable() }
-    // ...while the survivors finish their work untouched
-    try survivors.foreach(_.processAllAvailable())
-    finally survivors.foreach(_.stop())
-    BaseLogApp.routeNames.foreach { r =>
-      assertSame(s"log/$r", spark.read.parquet(s"$conLog/$r"),
-        spark.read.parquet(s"$isoLog/$r"))
     }
-    assertSame("province", spark.read.parquet(conProv),
-      spark.read.parquet(isoProv))
+  }
 
-    // restart the dead app from ITS OWN checkpoint: the unacknowledged
-    // batch replays onto the already-merged store idempotently and the
-    // store converges to the batch-twin answer
-    val sq2 = DimApp.run(spark, src, dimStore, dimCk)
-    sq2.processAllAvailable()
-    sq2.stop()
-    DimApp.configRows.foreach { cfg =>
-      assertSame(s"recovered/${cfg.sink_table}",
-        DimApp.store(spark, dimStore, cfg.sink_table)
-          .select(col("id"), col("seq"), explode(col("data"))),
-        DimApp.batchSnapshot(spark, sf, cfg.sink_table)
-          .select(col("id"), col("seq"), explode(col("data"))))
+  test("starting the fleet is all-or-nothing: one failing start stops " +
+      "the queries already started") {
+    staged { (in, root) =>
+      // without its detail stream the sku app's schema read fails, after
+      // five apps have started
+      new java.io.File(in.src).listFiles()
+        .filter(_.getName.startsWith("lineitem"))
+        .foreach(f => Standing.deleteTree(f.toPath))
+      intercept[Exception] { Topology.start(in, root) }
+      assert(spark.streams.active.isEmpty,
+        "a failed fleet start must leave no query running")
     }
   }
 }

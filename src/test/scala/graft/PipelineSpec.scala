@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.Pipelines
+import graft.streaming.{BaseLogApp, Topology, VersionedParquetMergeSink}
 
 /** End-to-end streaming pipeline specs: source → transform → multi-sink
   * parquet with checkpointing, read back and reconciled with the batch
@@ -12,64 +12,78 @@ class PipelineSpec extends SparkSuite {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("dwd route sinks: one pass writes 5 routed day-partitioned tables") {
-    val out = tmp("dwd_out")
-    val sq = Pipelines.dwdRouteSinks(spark, sf, out, tmp("dwd_ck"))
-    sq.processAllAvailable(); sq.stop()
-    // reconcile with the batch splitter (g3_multiway_split counts)
-    val batchCounts = q("g3_multiway_split")
-      .select(col("route"), col("route_ct"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    Pipelines.routes.values.foreach { route =>
-      val written = spark.read.parquet(s"$out/$route")
-      assert(written.count() == batchCounts(route),
-        s"route $route count mismatch")
-      // day-partitioned layout on disk (Doris par#{date} analog)
-      assert(written.columns.contains("cur_date"))
-      val dirs = new java.io.File(s"$out/$route").listFiles()
-        .filter(_.isDirectory).map(_.getName)
-      assert(dirs.nonEmpty && dirs.forall(_.startsWith("cur_date=")))
+    Topology.withRoot { root =>
+      val baselog = Topology.app("baselog")
+      BaseLogApp.logLines(spark, sf).write.parquet(s"$root/src/logs.parquet")
+      Topology.drain(Topology.start(
+        Topology.Inputs(spark, s"$root/src", sf), root, Seq(baselog)))
+      val out = Topology.store(root, "baselog")
+      // one pass over the log stream → six route tables, each equal in
+      // size to its batch twin's route
+      baselog.tables(spark, out).foreach { case (route, written) =>
+        assert(written.count() == BaseLogApp.batchRoute(spark, sf, route)
+          .count(), s"route $route count mismatch")
+      }
+      // the five DWD routes are day-partitioned on disk (Doris
+      // par#{date} analog); the dirty side output is not
+      BaseLogApp.routeNames.filter(_ != "dirty").foreach { route =>
+        assert(spark.read.parquet(s"$out/$route").columns
+          .contains("cur_date"))
+        val dirs = new java.io.File(s"$out/$route").listFiles()
+          .filter(_.isDirectory).map(_.getName)
+        assert(dirs.nonEmpty && dirs.forall(_.startsWith("cur_date=")))
+      }
     }
   }
 
   test("dws window sink: closed windows land day-partitioned, idempotent restart") {
-    val out = tmp("dws_out")
-    val ck = tmp("dws_ck")
-    val sq = Pipelines.dwsWindowSink(spark, sf, out, ck)
-    sq.processAllAvailable(); sq.stop()
-    val first = spark.read.parquet(out)
-    val n1 = first.count()
-    assert(n1 > 0)
-    assert(first.columns.toSet ==
-      Set("stt", "edt", "event_type", "pv_ct", "cur_date"))
-    // restart from the same checkpoint: no new data → no duplicate rows
-    val sq2 = Pipelines.dwsWindowSink(spark, sf, out, ck)
-    sq2.processAllAvailable(); sq2.stop()
-    assert(spark.read.parquet(out).count() == n1, "restart must be exactly-once")
-    // serving read prunes on the partition column
-    // partition-column values are directory names → inferred as DATE
-    val day = first.select(col("cur_date").cast("string")).head.getString(0)
-    val pruned = spark.read.parquet(out).filter(col("cur_date") === day)
-    assert(pruned.count() > 0)
+    Topology.withRoot { root =>
+      // the traffic-channel store: closed 10 s windows over the events
+      // stream, as the (cur_date, ch, uv_ct) table `/ch` serves
+      def run(): Unit = Topology.drain(Topology.start(
+        Topology.Inputs(spark, sf, sf), root,
+        Seq(Topology.app("traffic_channel"))))
+      val out = Topology.store(root, "traffic_channel")
+      run()
+      val first = spark.read.parquet(out)
+      val n1 = first.count()
+      assert(n1 > 0)
+      assert(first.columns.toSet == Set("ch", "uv_ct", "cur_date"))
+      val dirs = new java.io.File(out).listFiles()
+        .filter(f => f.isDirectory && !f.getName.startsWith("_"))
+        .map(_.getName)
+      assert(dirs.nonEmpty && dirs.forall(_.startsWith("cur_date=")))
+      // restart from the same checkpoint: no new data → no duplicate rows
+      run()
+      assert(spark.read.parquet(out).count() == n1,
+        "restart must be exactly-once")
+      // serving read prunes on the partition column
+      // partition-column values are directory names → inferred as DATE
+      val day = first.select(col("cur_date").cast("string")).head.getString(0)
+      val pruned = spark.read.parquet(out).filter(col("cur_date") === day)
+      assert(pruned.count() > 0)
+    }
   }
 
   test("dim merge sink applies upserts and deletes across micro-batches") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Double, Long)]
-    val ops = source.toDF().toDF("id", "op", "payload", "seq")
     val store = tmp("dim_store")
-    val sq = Pipelines.dimMergeSink(spark, ops, store, tmp("dim_ck"))
-    source.addData((1L, "upsert", 10.0, 1L), (2L, "upsert", 5.0, 2L))
-    sq.processAllAvailable()
-    assert(Pipelines.dimStore(spark, store).count() == 2)
+    // the DIM maintenance sink (HBaseSinkFunction.java:36-61 ≈ MERGE
+    // INTO): one merge per micro-batch, each committing version v<batch>
+    val sink = new VersionedParquetMergeSink(store, "id", "seq", "op",
+      Seq("payload"))
+    def ops(rows: (Long, String, Double, Long)*) =
+      rows.toDF("id", "op", "payload", "seq")
+    def payloads(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("payload")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def current() = payloads(sink.current(spark))
+    sink.merge(ops((1L, "upsert", 10.0, 1L), (2L, "upsert", 5.0, 2L)), 0L)
+    assert(sink.current(spark).count() == 2)
     // batch 2: delete key 1, update key 2, insert key 3
-    source.addData((1L, "delete", 0.0, 3L), (2L, "upsert", 6.0, 4L),
-      (3L, "upsert", 7.0, 5L))
-    sq.processAllAvailable(); sq.stop()
-    val state = Pipelines.dimStore(spark, store)
-      .select(col("id"), col("payload")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    sink.merge(ops((1L, "delete", 0.0, 3L), (2L, "upsert", 6.0, 4L),
+      (3L, "upsert", 7.0, 5L)), 1L)
+    val state = current()
     assert(state == Map(2L -> 6.0, 3L -> 7.0), s"bad final dim state: $state")
 
     // crash-safety slice: a torn version (no _SUCCESS marker) is
@@ -77,36 +91,23 @@ class PipelineSpec extends SparkSuite {
     // version
     val torn = new java.io.File(s"$store/v99")
     torn.mkdirs()
-    val after = Pipelines.dimStore(spark, store)
-      .select(col("id"), col("payload")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(after == state, "torn version directory must be skipped")
+    assert(current() == state, "torn version directory must be skipped")
 
     // time travel (VERSION AS OF): version 0 is the state after the
     // first micro-batch only — reading it back is a pruned scan of that
     // immutable version directory, not a recompute; a version at/after
     // the latest commit resolves to the current snapshot (k7's batch
     // twin states the same as-of semantics over the op-log prefix)
-    val sink = new graft.streaming.VersionedParquetMergeSink(
-      store, "id", "seq", "op", Seq("payload"))
-    val v0 = sink.snapshotAt(spark, 0L)
-      .select(col("id"), col("payload")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val v0 = payloads(sink.snapshotAt(spark, 0L))
     assert(v0 == Map(1L -> 10.0, 2L -> 5.0), s"bad as-of state: $v0")
-    val vLate = sink.snapshotAt(spark, 98L)
-      .select(col("id"), col("payload")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(vLate == state, "as-of past the last commit = current")
+    assert(payloads(sink.snapshotAt(spark, 98L)) == state, "as-of past the last commit = current")
 
     // retention (VACUUM analog): keep only the newest version; current()
     // is untouched, but time-travel behind the horizon now fails —
     // exactly a vacuumed Delta table's contract
     val removed = sink.expireVersions(1)
     assert(removed.nonEmpty, "expected at least one expired version")
-    val afterVacuum = Pipelines.dimStore(spark, store)
-      .select(col("id"), col("payload")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(afterVacuum == state, "retention must not touch current")
+    assert(current() == state, "retention must not touch current")
     intercept[IllegalArgumentException] {
       sink.snapshotAt(spark, removed.max)
     }
